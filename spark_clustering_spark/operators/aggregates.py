@@ -1742,11 +1742,11 @@ QUANTILE_TARGETS = ((0.5, 1, 2), (0.9, 9, 10), (0.99, 99, 100))
 def q_agg_quantiles_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact global p50/p90/p99 of order value WITHOUT a global sort:
     the type-1 quantile (value at rank ceil(q·n) in (value, key) order)
-    selected through the two-pass range-partition rank machinery
-    (``global_running_agg``) — range shuffle into sorted slices,
-    per-slice counts collected (P rows), carry-in offsets turn local
-    row_numbers into global ranks, and the three target rows filter
-    out. The targets use exact integer arithmetic (num·n+den−1)//den so
+    selected through the two-pass slice rank machinery
+    (``global_running_agg``) — rows bucketed into sorted slices by
+    literal cuts, per-slice counts collected (P rows), carry-in offsets
+    turn local row_numbers into global ranks, and the three target rows
+    filter out. The targets use exact integer arithmetic (num·n+den−1)//den so
     no float ceil can straddle engines.
 
     This is the scalable counterpart to q_agg_percentile /
@@ -2040,7 +2040,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the value multiset collapses by groupBy first (map-side
     combine); the cumulative weight over distinct values runs through
-    ``global_running_agg`` (range repartition + per-slice carry-in —
+    ``global_running_agg`` (literal slice cuts + per-slice carry-in —
     never a single-reducer Window.orderBy), and the exact grand total
     rides back with the same per-slice partials instead of a second
     data-wide pass — the q_window_ntile_scalable machinery serving an

@@ -235,7 +235,9 @@ def q_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled Lloyd iterations from deterministic init — the
     composition check for assign→update→assign→update (R4+R5+R11)."""
     # localCheckpoint (not persist): reused by both assign passes inside
-    # the query, and the blocks are GC-released when the DF goes away
+    # the query. Nothing unpersists it: the blocks stay until a driver
+    # GC lets the ContextCleaner drop the RDD, which a busy session may
+    # not reach for many queries.
     pts = points_df(spark, sf_dir).localCheckpoint(eager=False)
     c0 = centroids_df(spark, sf_dir)
     c1 = update_centroids(assign(pts, c0)).select("cid", "cvec")
@@ -613,8 +615,8 @@ def q_ml_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each of the K−1 draws is one narrow min-update pass (the
     newest pick inlined as a literal, like q_sample_kcenter) + one
-    ordered cumsum served by ``global_running_agg`` (range repartition
-    + per-slice carry-in — never a single-reducer window); the exact
+    ordered cumsum served by ``global_running_agg`` (literal slice
+    cuts + per-slice carry-in — never a single-reducer window); the exact
     grand total comes back with the same per-slice partials, and the
     driver moves only k·d floats."""
     from spark_clustering_spark.functions.rng import py_lcg_uniform
@@ -1640,7 +1642,7 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scores are first collapsed by groupBy (map-side combine);
     the global cumulative count over distinct scores is served by
-    ``global_running_agg`` (range repartition + per-slice carry-in —
+    ``global_running_agg`` (literal slice cuts + per-slice carry-in —
     never a single-reducer Window.orderBy); the final agg is one
     narrow pass to a single row."""
     from spark_clustering_spark.operators.windows import global_running_agg
@@ -1927,7 +1929,7 @@ def q_ml_gains_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     products.
 
     Scale: the decile assignment runs through ``ntile_scalable``
-    (range repartition + carry-in ranks — never a single-reducer
+    (literal slice cuts + carry-in ranks — never a single-reducer
     ORDER BY over the data); everything after operates on
     {GAINS_DECILES} rows."""
     from spark_clustering_spark.operators.windows import ntile_scalable

@@ -1081,7 +1081,7 @@ def q_olap_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the per-part aggregate reduces the fact table to part
     cardinality before any window; the global ordered cumulative sum
-    is served by ``global_running_agg`` (range repartition +
+    is served by ``global_running_agg`` (literal slice cuts +
     per-slice carry-in — no single-reducer window), and the grand
     total is the driver-combined exact decimal of the same per-slice
     partials, riding as a literal instead of a second data-wide
@@ -1361,7 +1361,7 @@ def q_olap_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the base aggregate is one fact pass down to customer
     cardinality; the three quintile cuts CHAIN through
-    ``ntile_scalable`` (range repartition + per-slice rank offsets) —
+    ``ntile_scalable`` (literal slice cuts + per-slice rank offsets) —
     never a partition-less ``ntile() OVER ()`` single reducer. The
     monetary sort key is the exact DECIMAL(38,8) sum, so tile
     boundaries cannot flap with accumulation order."""
@@ -1427,7 +1427,7 @@ def q_olap_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     G = 2·Σᵢ i·xᵢ / (n·Σxᵢ) − (n+1)/n over revenues sorted ascending.
 
     The global rank i comes from ``global_running_agg``'s two-pass
-    range-partition count (carry-in + local row_number), NOT a
+    slice count (carry-in + local row_number), NOT a
     partition-less window — ranking n customers never funnels through
     one reducer. Both Σxᵢ and the rank-weighted Σ i·xᵢ accumulate in
     exact decimal (rank is an exact BIGINT weight), so the statistic
@@ -1703,7 +1703,7 @@ def q_olap_customer_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two customer-cardinality aggregates off partition-prunable
     date filters; each period's quintile cut goes through
-    ``ntile_scalable`` (range repartition + per-slice rank offsets —
+    ``ntile_scalable`` (literal slice cuts + per-slice rank offsets —
     the same no-partition-less-window discipline as q_olap_rfm, vs
     the oracle's single-reducer ntile() OVER ()); the transition join
     is custkey-keyed and the matrix collapses to ≤25 cells."""
@@ -1788,7 +1788,7 @@ def q_olap_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier linearly: in (freq DESC, mon DESC) order over distinct
     pairs, a pair is on the frontier iff its mon strictly raises the
     running maximum — served by ``global_running_agg``'s
-    range-partition + carry-in machinery, so no single-reducer sort
+    slice + carry-in machinery, so no single-reducer sort
     and no quadratic pair join ever materializes.
 
     The candidate filter (mon == inclusive running max) can keep a

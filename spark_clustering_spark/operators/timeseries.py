@@ -580,7 +580,7 @@ def q_ts_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: sessionization and span extraction shuffle on user_id; the
     change-point stream (2 rows per session — data-proportional) is
-    swept by ``global_running_agg``: range-partitioned by time with
+    swept by ``global_running_agg``: sliced by literal time cuts with
     per-slice carry-in offsets, never a single-reducer window."""
     e = table(spark, sf_dir, "events")
     gap = SESSION_GAP_US
@@ -1423,7 +1423,7 @@ def q_ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the stream reduces to the bounded daily series first; both
     medians compute on that series (here via a sorted-array fold — at
     true scale the same two numbers come from
-    q_agg_quantiles_scalable's range-partition rank machinery, since
+    q_agg_quantiles_scalable's slice rank machinery, since
     a median IS the p50 of a bounded-or-not series); the scoring pass
     is a projection against two broadcast scalars."""
     from spark_clustering_spark.functions.detagg import DEC

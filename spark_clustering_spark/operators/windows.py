@@ -8,7 +8,7 @@ frame's internal order is unspecified (the RANGE frame avg).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -167,7 +167,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact global quartiles, served by the range-partitioned scale
+    """Exact global quartiles, served by the sliced scale
     path (``ntile_scalable``) — ``Window.orderBy`` with no PARTITION BY
     would funnel every row through one reducer, which is the classic
     100 TB scale-killer. Both this query and
@@ -180,6 +180,77 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.select("c_custkey", "quartile")
 
 
+def _order_key(c, jvm) -> tuple:
+    """``(value column, descending, nulls_first)`` of one ORDER BY item:
+    a name or plain Column sorts ascending with nulls first (Spark's
+    default); a ``.desc()`` / ``.asc_nulls_last()``-style sort order
+    carries its own direction and null placement, read from the
+    Column's JVM sort-order node."""
+    col = F.col(c) if isinstance(c, str) else c
+    node = col._jc.node()
+    if node.getClass().getSimpleName() != "SortOrder":
+        return col, False, True
+    child = Column(jvm.org.apache.spark.sql.Column(node.child()))
+    desc = node.sortDirection().getClass().getSimpleName() == "Descending$"
+    nulls_first = node.nullOrdering().getClass().getSimpleName() == "NullsFirst$"
+    return child, desc, nulls_first
+
+
+def _after(keys: list, cut: tuple):
+    """Boolean Column: the row sorts strictly after the literal key tuple
+    ``cut`` under ``keys`` — lexicographic, each key with its own
+    direction and null placement (a null cut value resolves here, on the
+    driver). A null result means "not after": the expression has no
+    negation, and CASE WHEN reads null as false."""
+    after = None
+    for (col, desc, nulls_first, dt), v in reversed(list(zip(keys, cut))):
+        if v is None:  # only non-null rows sort after a null, iff nulls go first
+            gt, eq = (col.isNotNull() if nulls_first else None), col.isNull()
+        else:
+            lit = F.lit(v).cast(dt)
+            gt = col < lit if desc else col > lit
+            if not nulls_first:  # a null row sorts after a non-null cut
+                gt = gt | col.isNull()
+            eq = col.eqNullSafe(lit)
+        if after is not None:
+            tie = eq & after
+            gt = tie if gt is None else gt | tie
+        after = F.lit(False) if gt is None else gt
+    return after
+
+
+def _slice_ids(df: DataFrame, order_cols: list, num_partitions: int):
+    """Slice-id Column in ``[0, num_partitions)`` for ``df``'s rows: the
+    number of literal cuts a row sorts strictly after. The cuts are
+    evenly spaced tuples of a sorted ≤ 20·``num_partitions``-row random
+    sample of the full order key (one small job)."""
+    jvm = df.sparkSession._jvm
+    keys = [_order_key(c, jvm) for c in order_cols]
+    sample = (
+        df.orderBy(F.rand(seed=0))
+        .limit(20 * num_partitions)
+        .orderBy(*order_cols)
+        .select(*[col for col, _, _ in keys])
+    )
+    types = [f.dataType.simpleString() for f in sample.schema.fields]
+    keys = [k + (dt,) for k, dt in zip(keys, types)]
+    tuples = sample.collect()
+    cuts = [
+        tuples[(j + 1) * len(tuples) // num_partitions]
+        for j in range(num_partitions - 1)
+    ] if tuples else []
+
+    def slice_of(lo: int, hi: int):  # bisection over the sorted cuts[lo:hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(
+            _after(keys, cuts[mid]), slice_of(mid + 1, hi)
+        ).otherwise(slice_of(lo, mid))
+
+    return slice_of(0, len(cuts))
+
+
 def global_running_agg(
     df: DataFrame,
     order_cols: list,
@@ -190,22 +261,29 @@ def global_running_agg(
 
     ``Window.orderBy`` with no PARTITION BY forces every row through one
     reducer — the classic 100 TB scale-killer. This is the generalized
-    two-pass range-partition pattern (the ``ntile_scalable`` machinery,
-    promoted per VERDICT r4 task 1):
+    two-pass slice + carry-in pattern (the ``ntile_scalable``
+    machinery, promoted per VERDICT r4 task 1):
 
-    1. ``repartitionByRange`` on the total-ordering sort key: a range
-       shuffle into ``num_partitions`` sorted slices. ``order_cols``
-       must be a total order (include a unique tiebreaker) so slice
-       boundaries are unambiguous; they may be ``Column`` expressions
-       including ``.desc()`` sort orders.
-    2. One small job collects per-slice aggregate partials
+    1. One small job samples ≤ 20·``num_partitions`` order-key tuples
+       (a seeded random top-m) and sorts them; ``num_partitions``−1 of
+       them, evenly spaced, become the slice cuts. ``order_cols`` may be
+       names, ``Column`` expressions or sort orders (``.desc()``,
+       ``.asc_nulls_last()``, …); include a unique tiebreaker so the
+       cuts split runs of tied leading keys.
+    2. The cuts enter the plan as literals: a row's slice ``_pid`` is
+       the number of cuts it sorts strictly after — a binary search of
+       lexicographic comparisons that honour each key's direction and
+       null placement. ``_pid`` is a pure function of the row's keys, so
+       every execution of the returned frame sees the same slices; no
+       range shuffle, no pin, nothing to release.
+    3. One small job collects per-slice aggregate partials
        (``num_partitions`` rows — the k·partitions small-state pattern,
        same as centroid collection); the driver combines them into an
        exclusive prefix ("carry-in") per slice.
-    3. A per-slice window computes the local running aggregate; the
-       global value = carry-in ⊕ local. Carry-ins ride as a dense
-       ARRAY literal indexed by partition id — O(1) per-row probe
-       (Spark map literals probe linearly).
+    4. A per-slice window (``PARTITION BY _pid``) computes the local
+       running aggregate; the global value = carry-in ⊕ local.
+       Carry-ins ride as a dense ARRAY literal indexed by ``_pid`` —
+       O(1) per-row probe (Spark map literals probe linearly).
 
     ``aggs`` maps output column name → ``(kind, expr)`` with ``kind``
     in ``{"sum", "max", "count"}`` (``count`` ignores ``expr`` and
@@ -215,24 +293,16 @@ def global_running_agg(
     input) — callers needing a "grand total" column get it as a
     literal instead of a second data-wide window.
 
-    The localCheckpoint pins the range shuffle so the partials job and
-    the running job see identical slice boundaries (repartitionByRange
-    samples its input, so boundaries are not reproducible across
-    executions). LAZY, not eager: the partials collect below is always
-    the first action and materializes every partition, so the pin is
-    identical but the dedicated eager-materialization job per call is
-    gone — rfm chains three of these, kmeans++ runs one per draw
-    (guide §1.2: remove whole passes first).
+    Each of the three jobs (sample, partials, the caller's action on
+    the returned frame) evaluates the input: nothing is kept between
+    them, so an expensive input (an aggregate, or a chain of these
+    calls) is computed three times.
     """
     if num_partitions is None:
         num_partitions = max(
             int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8")), 2
         )
-    d = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
+    d = df.withColumn("_pid", _slice_ids(df, order_cols, num_partitions))
     slice_aggs = []
     for out, (kind, expr) in aggs.items():
         col = F.col(expr) if isinstance(expr, str) else expr
@@ -327,7 +397,7 @@ def ntile_scalable(
 )
 def q_window_ntile_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same exact quartiles as ``q_window_ntile``, produced by the
-    scale path (range repartition + per-slice offsets) — the oracle is
+    scale path (literal slice cuts + per-slice offsets) — the oracle is
     identical, so the driver hash-verifies the two variants agree."""
     c = table(spark, sf_dir, "customer")
     t = ntile_scalable(

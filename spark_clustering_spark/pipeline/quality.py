@@ -371,7 +371,7 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_text_unigram_logprob; ranking is a window PARTITIONED BY source
     (each source streams independently — no global sort). At 100 TB
     replace the exact per-source rank with the q_window_ntile_scalable
-    range-partition plan; cuts and semantics are unchanged."""
+    literal-cut slice plan; cuts and semantics are unchanged."""
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")

@@ -475,20 +475,20 @@ def q_pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     conventions.
 
     The cumulative sum over a GLOBAL quality ordering is the classic
-    single-reducer trap; it's served by ``global_running_agg`` — range
-    shuffle on (quality DESC, doc_id), per-slice integer partials,
-    driver carry-ins — so no task ever materializes the whole ordering
-    (same machinery as q_window_running_global; plan-asserted there).
+    single-reducer trap; it's served by ``global_running_agg`` —
+    literal slice cuts on (quality DESC, doc_id), per-slice integer
+    partials, driver carry-ins — so no task ever materializes the
+    whole ordering (same machinery as q_window_running_global; plan-asserted there).
 
     Determinism: token counts are integers, the ratio is one double
     division rounded to 6 dp BEFORE ordering (so both engines order on
     identical keys, doc_id breaking ties), and the running sum is an
     integer sum — exact.
 
-    Scale: scoring is a stateless projection; the range shuffle moves
+    Scale: scoring is a stateless projection; the slice shuffle moves
     (doc_id, 2 ints, 1 double) per row, never text; the budget filter
     prunes everything past the cut. At 100 TB the budget cut can also
-    be found by a quantile sketch on quality first, turning the range
+    be found by a quantile sketch on quality first, turning the slice
     shuffle into a broadcast-threshold filter — the two-job variant —
     but the carry-in form stays exact under heavy quality ties."""
     from spark_clustering_spark.operators.windows import global_running_agg

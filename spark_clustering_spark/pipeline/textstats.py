@@ -954,8 +954,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The global frequency ranking is the scale decision: a vocabulary
     at 100 TB is hundreds of millions of terms, so rank comes from
-    ``global_running_agg``'s two-pass carry-in row number (range
-    shuffle on (freq DESC, term)) — never a single-reducer window.
+    ``global_running_agg``'s two-pass carry-in row number (literal
+    slice cuts on (freq DESC, term)) — never a single-reducer window.
 
     Determinism: ranks and counts are integers; each ln(·) and product
     is one double expression on identical integer inputs (libm
@@ -964,7 +964,7 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on identical doubles and goes through dround.
 
     Scale: tokenize → map-side-combined term count (the only
-    fact-sized shuffle) → vocab-sized range shuffle → one scalar
+    fact-sized shuffle) → vocab-sized slice shuffle → one scalar
     aggregate. No data-proportional single partition anywhere."""
     from spark_clustering_spark.functions.detagg import DEC
     from spark_clustering_spark.operators.windows import global_running_agg

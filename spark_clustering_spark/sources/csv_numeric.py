@@ -45,7 +45,7 @@ def read_numeric_csv(spark: SparkSession, path: str) -> DataFrame:
     if bad:
         raise ValueError(f"non-numeric token in CSV input: {path}")
     # Deterministic 0-based id by (file, in-file position) order, minted
-    # by global_running_agg's two-pass rank: range repartition on the
+    # by global_running_agg's two-pass rank: literal slice cuts on the
     # order key, per-slice counts, carry-in offsets — the R1 ingest
     # front door never funnels the dataset through one reducer.
     from spark_clustering_spark.operators.windows import global_running_agg

@@ -148,7 +148,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, so it drops a subset of these).
 
     Scale: the arrival-order running max is served by
-    ``global_running_agg`` (range repartition on event_id + per-slice
+    ``global_running_agg`` (literal event_id slice cuts + per-slice
     max carry-in) — never the full events table through one reducer."""
     from spark_clustering_spark.operators.windows import global_running_agg
 

@@ -116,7 +116,7 @@ def test_dedup_exact_shuffles_digest_not_text(spark, qs):
 
 def test_ntile_scalable_has_no_single_partition_exchange(spark, qs):
     """Neither ntile variant may funnel data through one partition —
-    q_window_ntile now delegates to the range-partitioned scale path
+    q_window_ntile now delegates to the sliced scale path
     (round-4: closed the last single-partition-sort in the inventory)."""
     plan = formatted_plan(qs["q_window_ntile_scalable"](spark, SF_SMALL))
     assert "SinglePartition" not in plan, plan[:800]
@@ -462,7 +462,7 @@ def test_running_agg_queries_have_no_single_partition_exchange(spark, qs):
 
 def test_csv_ingest_id_minting_no_single_partition(spark):
     """R1 ingest front door: 0-based id minting uses the two-pass
-    range-partitioned rank, never a global unpartitioned row_number."""
+    sliced rank, never a global unpartitioned row_number."""
     import os
 
     from spark_clustering_spark.sources.csv_numeric import read_numeric_csv
@@ -548,7 +548,7 @@ def test_spatial_grid_is_pure_hash_join(spark, qs):
 
 def test_token_budget_no_single_partition(spark, qs):
     """The global quality-ordered running sum rides
-    global_running_agg's range shuffle — never one reducer."""
+    global_running_agg's slice shuffle — never one reducer."""
     plan = formatted_plan(qs["q_pipeline_token_budget"](spark, SF_SMALL))
     assert "SinglePartition" not in plan, plan[:1200]
 
@@ -680,7 +680,7 @@ def _no_unpartitioned_ordered_window(plan: str) -> bool:
 
 def test_ml_auc_no_data_wide_single_reducer(spark, qs):
     """AUC's global cumulative count must ride global_running_agg's
-    range repartition — the only SinglePartition allowed is the final
+    literal slice cuts — the only SinglePartition allowed is the final
     one-row aggregate of k partials, never a Sort/Window funnel."""
     plan = formatted_plan(qs["q_ml_auc"](spark, SF_SMALL))
     assert _no_unpartitioned_ordered_window(plan), plan[:1200]

@@ -129,7 +129,7 @@ from pyspark.sql.window import Window
     ],
 )
 def test_ntile_scalable_matches_exact_ntile(spark, n_rows, n_tiles, n_parts):
-    """The range-partitioned ntile must reproduce F.ntile exactly for
+    """The sliced ntile must reproduce F.ntile exactly for
     every remainder/degenerate shape (including more partitions than
     rows and more tiles than rows)."""
     from spark_clustering_spark.operators.windows import ntile_scalable

@@ -213,7 +213,7 @@ def test_ivf_recall_monotone_in_nprobe(spark):
 
 def test_ntile_scalable_invariants_at_1m_rows(spark):
     """Scale check without an exact single-partition twin: on 1M rows
-    the range-partitioned ntile must produce tiles whose sizes differ by
+    the sliced ntile must produce tiles whose sizes differ by
     at most 1 (remainder spread over the leading tiles) and whose key
     ranges are monotone non-overlapping — the two properties that define
     ntile — while the plan stays free of single-partition exchanges."""

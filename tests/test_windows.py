@@ -1,8 +1,9 @@
-"""global_running_agg property tests: the two-pass range-partitioned
+"""global_running_agg property tests: the two-pass literal-cut slice
 running aggregate must agree EXACTLY with the naive single-reducer
 window on randomized inputs — duplicates in the order prefix, skewed
-key distributions, empty slices, negative values, and every supported
-kind (sum / max / count) at once."""
+key distributions, desc / null / string keys, empty slices, negative
+values, and every supported kind (sum / max / count) at once — and must
+leave nothing persisted behind."""
 
 from __future__ import annotations
 
@@ -59,23 +60,6 @@ def test_matches_naive_window_on_random_data(spark, seed, n, num_partitions):
     assert totals["run_rn"] == n
 
 
-def test_desc_order_and_skew(spark):
-    # one dominant key value: most rows land in one range slice
-    rows = [(i, 5 if i % 10 else i, i * 3 - 40) for i in range(120)]
-    df = spark.createDataFrame(rows, "id bigint, k int, v bigint")
-    order_cols = [F.col("k").desc(), F.col("id")]
-    got, _ = _scalable(df, order_cols, 8)
-    want = _naive(df, order_cols)
-    assert sorted(got.collect()) == sorted(want.collect())
-
-
-def test_empty_input(spark):
-    df = spark.createDataFrame([], "id bigint, k int, v bigint")
-    got, totals = _scalable(df, [F.col("k"), F.col("id")], 4)
-    assert got.count() == 0
-    assert totals == {"run_sum": None, "run_max": None, "run_rn": None}
-
-
 def test_more_partitions_than_rows(spark):
     rows = [(0, 1, 10), (1, 1, -5), (2, 0, 7)]
     df = spark.createDataFrame(rows, "id bigint, k int, v bigint")
@@ -83,3 +67,100 @@ def test_more_partitions_than_rows(spark):
     want = _naive(df, [F.col("k"), F.col("id")])
     assert sorted(got.collect()) == sorted(want.collect())
     assert totals["run_rn"] == 3
+
+
+def _desc_nulls(spark):
+    # desc leading key with nulls (desc puts them last), plus the
+    # explicit opposite placements on the same data
+    rows = [(i, None if i % 7 == 0 else i % 5, i % 13 - 6) for i in range(90)]
+    df = spark.createDataFrame(rows, "id bigint, k int, v bigint")
+    return df, [F.col("k").desc(), F.col("id")]
+
+
+def _desc_nulls_first(spark):
+    df, _ = _desc_nulls(spark)
+    return df, [F.col("k").desc_nulls_first(), F.col("id").desc()]
+
+
+def _asc_nulls_last(spark):
+    df, _ = _desc_nulls(spark)
+    return df, [F.col("k").asc_nulls_last(), F.col("id")]
+
+
+def _string_mono_id(spark):
+    # the CSV ingest shape: a string leading key (file name) tied over
+    # many rows, broken by monotonically_increasing_id
+    rows = [(f"part-{i % 3:05d}.csv", (i * 37) % 101 - 50) for i in range(150)]
+    df = spark.createDataFrame(rows, "f string, v bigint")
+    df = df.withColumn("id", F.monotonically_increasing_id())
+    return df, [F.col("f"), F.col("id")]
+
+
+def _dominant_value(spark):
+    # the q_text_zipf shape: one leading value holds most rows
+    rows = [(i, 1 if i % 20 else i, i % 9 - 4) for i in range(400)]
+    df = spark.createDataFrame(rows, "id bigint, k int, v bigint")
+    return df, [F.col("k").desc(), F.col("id")]
+
+
+def _empty(spark):
+    df = spark.createDataFrame([], "id bigint, k int, v bigint")
+    return df, [F.col("k").desc(), F.col("id")]
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [_desc_nulls, _desc_nulls_first, _asc_nulls_last, _string_mono_id,
+     _dominant_value, _empty],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_key_shapes_match_naive_window(spark, shape):
+    df, order_cols = shape(spark)
+    got, totals = _scalable(df, order_cols, 8)
+    want = _naive(df, order_cols)
+    g = {r["id"]: tuple(r) for r in got.collect()}
+    w = {r["id"]: tuple(r) for r in want.collect()}
+    assert g == w
+    vs = [r["v"] for r in df.collect()]
+    assert totals == {
+        "run_sum": sum(vs) if vs else None,
+        "run_max": max(vs) if vs else None,
+        "run_rn": len(vs) or None,
+    }
+
+
+def test_dominant_value_still_splits_on_tiebreaker(spark):
+    """Cuts are full order-key tuples, so a leading value that holds
+    95% of the rows still splits across slices on the tiebreaker: no
+    slice exceeds twice its fair share."""
+    from spark_clustering_spark.operators.windows import _slice_ids
+
+    df, order_cols = _dominant_value(spark)
+    n, parts = df.count(), 8
+    sizes = [
+        r["count"]
+        for r in df.groupBy(_slice_ids(df, order_cols, parts)).count().collect()
+    ]
+    assert sum(sizes) == n
+    assert max(sizes) <= 2 * n / parts, sizes
+
+
+def test_rerun_is_identical_and_pins_nothing(spark):
+    """Re-executing a built result gives identical rows, and neither
+    building nor executing leaves a persisted RDD behind."""
+    from spark_clustering_spark.operators.windows import ntile_scalable
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    rows = [(i, i % 11, i % 7 - 3) for i in range(300)]
+    df = spark.createDataFrame(rows, "id bigint, k int, v bigint")
+    before = persisted()
+    got, _ = _scalable(df, [F.col("k").desc(), F.col("id")], 8)
+    tiles = ntile_scalable(df, ["k", "id"], 5, num_partitions=8)
+    first = (sorted(got.collect()), sorted(tiles.collect()))
+    second = (sorted(got.collect()), sorted(tiles.collect()))
+    assert first == second
+    assert persisted() - before == set()

@@ -31,8 +31,8 @@ NOTES = {
         "TakeOrderedAndProject: per-partition top-k heaps, no global sort."
     ),
     "q_window_running_global": (
-        "global cumulative sum with NO single-reducer window: range "
-        "repartition on the order key, per-slice running sum under a "
+        "global cumulative sum with NO single-reducer window: literal "
+        "slice cuts on the order key, per-slice running sum under a "
         "per-slice window, exact decimal carry-in offsets as literals "
         "(global_running_agg — also serves q_olap_abc_pareto, "
         "q_ts_concurrency, q_stream_watermark, and CSV id minting)."
@@ -162,7 +162,7 @@ NOTES = {
         "contributions against broadcast rank/out-weight tables."
     ),
     "q_olap_rfm": (
-        "three chained ntile_scalable passes (range repartition + "
+        "three chained ntile_scalable passes (literal slice cuts + "
         "per-slice rank offsets) — global quintiles with no "
         "partition-less window anywhere in the plan."
     ),
@@ -201,7 +201,7 @@ NOTES = {
         "arithmetic."
     ),
     "q_agg_quantiles_scalable": (
-        "range repartition into sorted slices + per-slice row_number "
+        "literal cuts bucket rows into sorted slices + per-slice row_number "
         "with driver carry-in offsets (global_running_agg) — exact "
         "global ranks, SinglePartition-free (plan-asserted); the 3 "
         "target rows filter out of the ranked stream."
@@ -218,15 +218,15 @@ NOTES = {
     ),
     "q_ml_auc": (
         "rank-sum AUC: scores collapse in a partial/final HashAggregate "
-        "pair, the cumulative count rides global_running_agg's range "
-        "repartition (no SinglePartition Sort anywhere), and the only "
+        "pair, the cumulative count rides global_running_agg's literal "
+        "slice cuts (no SinglePartition Sort anywhere), and the only "
         "one-partition exchange feeds the final one-row aggregate of "
         "k partials — bounded state, not data."
     ),
     "q_agg_weighted_median": (
         "weighted median as an order statistic over "
         "global_running_agg: distinct values groupBy first (map-side "
-        "combine), range shuffle into sorted slices, per-slice window, "
+        "combine), literal cuts into sorted slices, per-slice window, "
         "then a one-row min — the exact grand total rides back with the "
         "per-slice partials instead of a second data-wide pass."
     ),
