@@ -264,6 +264,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "runs": runs_by_key,
                 "samples": samples,
                 "canary_runs": canary_runs,
                 "canary_spread": canary_spread,

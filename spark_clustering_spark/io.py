@@ -56,6 +56,41 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# The session-artifact store: work many declared keys share (edge builds
+# and their stats, trained quantizers), keyed by (applicationId, sf_dir,
+# kind) so two scales never alias and a restarted session never reads a
+# dead context's pins.
+_ARTIFACTS: dict = {}
+
+
+def artifact(spark: SparkSession, sf_dir: str, kind, build):
+    """The ``kind`` artifact of this (application, sf_dir) scope, built
+    by the zero-argument ``build()`` on first use and served from the
+    store after that.
+
+    One eviction rule: inserting for a new scope drops every entry of
+    every other scope, so within a scope the store holds at most one
+    entry per kind. Entries hold pinned localCheckpoints; dropping the
+    last reference is their release (a localCheckpoint is not in the
+    CacheManager, so unpersist() would be a no-op): Spark's
+    ContextCleaner unpersists the pinned blocks once the driver-side
+    reference is garbage-collected."""
+    scope = (spark.sparkContext.applicationId, sf_dir)
+    key = (*scope, kind)
+    if key in _ARTIFACTS:
+        return _ARTIFACTS[key]
+    value = build()
+    for k in [k for k in _ARTIFACTS if k[:2] != scope]:
+        del _ARTIFACTS[k]
+    _ARTIFACTS[key] = value
+    return value
+
+
+def release() -> None:
+    """Drop every stored artifact of every scope."""
+    _ARTIFACTS.clear()
+
+
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLES}
 

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_clustering_spark.functions.detagg import dround, sql_dround
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import artifact, table
 from spark_clustering_spark.registry import query
 
 PR_DAMPING = 0.85
@@ -39,37 +39,35 @@ EDGE_BCAST_MAX = 2_000_000
 _PK = 1 << 32  # (u,v) → u*2^32 + v single-long pair key
 
 
-_EDGE_CACHE: dict = {}
-_EDGE_STATS: dict = {}
+def _edge_stats(
+    spark: SparkSession, sf_dir: str, cap: int | None
+) -> tuple[int, int, int]:
+    """(n_edges, min_id, max_id) of ``basket_edges(spark, sf_dir, cap)``:
+    one aggregate job per (scope, cap), stored in the session-artifact
+    store beside the edges it describes (io.artifact), so the wedge
+    consumers of one edge set share it and it goes when the edges go."""
 
-
-def _edge_stats(e: DataFrame) -> tuple[int, int, int]:
-    """(n_edges, min_id, max_id) of a pinned edge set — ONE aggregate
-    job per DataFrame per session, shared via _EDGE_STATS (the four
-    wedge-family consumers previously each ran their own count() job
-    against the same cached edge checkpoint; id() keys are stable
-    because _EDGE_CACHE holds the DataFrame for the session)."""
-    k = id(e)
-    hit = _EDGE_STATS.get(k)
-    if hit is None:
-        row = e.agg(
+    def build():
+        row = basket_edges(spark, sf_dir, cap).agg(
             F.count(F.lit(1)).alias("n"),
             F.min(F.least("u", "v")).alias("mn"),
             F.max(F.greatest("u", "v")).alias("mx"),
         ).collect()[0]
-        hit = _EDGE_STATS[k] = (
+        return (
             int(row["n"]),
             int(row["mn"]) if row["mn"] is not None else 0,
             int(row["mx"]) if row["mx"] is not None else 0,
         )
-    return hit
+
+    return artifact(spark, sf_dir, ("edge_stats", cap), build)
 
 
-def _bcast_path_ok(e: DataFrame) -> bool:
-    """Gate for the broadcast small path: bounded edge count AND ids
-    packable into the single-long (u,v) key (non-negative, < 2^31).
-    Out-of-range ids route to the shuffle path, which never packs."""
-    n, mn, mx = _edge_stats(e)
+def _bcast_path_ok(spark: SparkSession, sf_dir: str, cap: int | None) -> bool:
+    """Gate for the broadcast small path over ``basket_edges(spark,
+    sf_dir, cap)``: bounded edge count AND ids packable into the
+    single-long (u,v) key (non-negative, < 2^31). Out-of-range ids route
+    to the shuffle path, which never packs."""
+    n, mn, mx = _edge_stats(spark, sf_dir, cap)
     return n <= EDGE_BCAST_MAX and mn >= 0 and mx < (1 << 31)
 
 
@@ -77,16 +75,18 @@ def basket_edges(spark: SparkSession, sf_dir: str, cap: int | None = None):
     """DISTINCT part co-purchase edges (u < v): parts adjacent iff some
     order contains both; ``cap`` keeps only baskets with ≤cap distinct
     parts (the focused-basket rule of q_graph_jaccard_linkpred) or None
-    for the full graph. Cached per (application, sf_dir, cap) as an
-    EAGER localCheckpoint: seven graph operators share the exact same
-    fact-sized edge build, so per session it runs once — the same
-    fixture-reuse discipline as sources/bucketed.py (keyed by sf_dir so
-    two scales never alias) — and every consumer starts from the pinned
-    shuffle output instead of re-scanning lineitem."""
-    key = (spark.sparkContext.applicationId, sf_dir, cap)
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    for the full graph. Built once per (application, sf_dir, cap) into
+    the session-artifact store (io.artifact) as a localCheckpoint: eight
+    graph operators share the exact same fact-sized edge build, so every
+    consumer starts from the pinned shuffle output instead of
+    re-scanning lineitem, and the pin is dropped with the rest of its
+    scope when another sf_dir's artifact is stored."""
+    return artifact(
+        spark, sf_dir, ("edges", cap), lambda: _build_edges(spark, sf_dir, cap)
+    )
+
+
+def _build_edges(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame:
     li = (
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -125,7 +125,7 @@ def basket_edges(spark: SparkSession, sf_dir: str, cap: int | None = None):
     if n_li >= 10_000_000:
         width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         width = min(4096, max(width, -(-n_li // 250_000)))
-        e = pairs.repartition(width, "u", "v").distinct().localCheckpoint(eager=True)
+        return pairs.repartition(width, "u", "v").distinct().localCheckpoint(eager=True)
     else:
         # Small path: planner-placed dedup, LAZY checkpoint (pinned on
         # first use, shared by all consumers). Its few-partition layout
@@ -135,9 +135,7 @@ def basket_edges(spark: SparkSession, sf_dir: str, cap: int | None = None):
         # assortativity 1.6→2.3 s at sf0.1); the wedge queries that DO
         # amplify work per edge spread their probe stream locally via
         # _wedge_spread() instead.
-        e = pairs.distinct().localCheckpoint(eager=False)
-    _EDGE_CACHE[key] = e
-    return e
+        return pairs.distinct().localCheckpoint(eager=False)
 
 
 def _wedge_spread(df: DataFrame) -> DataFrame:
@@ -377,8 +375,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # pin: 3 join sides below
     )
-    n_edges_m = _edge_stats(e)[0]  # one shared stats job per session
-    if _bcast_path_ok(e):
+    n_edges_m = _edge_stats(spark, sf_dir, None)[0]  # stored beside the edges
+    if _bcast_path_ok(spark, sf_dir, None):
         # broadcast closure: the oriented edge list ships twice (wedge
         # build side keyed s, closure side packed (s,t)); wedges stream
         # through both probes map-side and collapse into per-task count
@@ -854,7 +852,7 @@ def q_graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     wa = adj.select("node", F.col("nbr").alias("u"))
     wb = adj.select("node", F.col("nbr").alias("v"))
-    if _bcast_path_ok(e):
+    if _bcast_path_ok(spark, sf_dir, 5):
         # broadcast wedge plan — same shape as q_graph_adamic_adar's
         # small path (see the comment there): map-side wedge build,
         # packed-key candidate aggregation, ≥2-common filter BEFORE the
@@ -1115,7 +1113,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wa = adj.select("node", F.col("nbr").alias("u"))
     wb = adj.select("node", F.col("nbr").alias("v"))
-    if _bcast_path_ok(e):
+    if _bcast_path_ok(spark, sf_dir, 5):
         # broadcast wedge plan (guide §2.4/§3.1): the adjacency ships
         # as the wedge build side and the edge set as a packed-key
         # anti-join relation; the center weight rides the probe side
@@ -1271,7 +1269,7 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     wa = adj.select(F.col("node").alias("center"), F.col("nbr").alias("u"))
     wb = adj.select(F.col("node").alias("center"), F.col("nbr").alias("v"))
-    if _bcast_path_ok(e):
+    if _bcast_path_ok(spark, sf_dir, 5):
         # broadcast wedge plan (see q_graph_adamic_adar's small path):
         # wedges build map-side against the broadcast adjacency and
         # close against the packed-key broadcast edge set, so the whole

@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 from spark_clustering_spark.functions.detagg import DEC, dround, sql_dround
 from spark_clustering_spark.functions.distance import as_double_array, cosine, dot_dec
 from spark_clustering_spark.functions.rng import py_lcg_uniform
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import artifact, table
 from spark_clustering_spark.registry import query
 
 N_PROBES = 5
@@ -168,53 +168,25 @@ def cosine_lsh_buckets(e: DataFrame, dim: int, n_planes: int = 16) -> DataFrame:
     return e.withColumn("bucket", bucket)
 
 
-_TRAIN_CACHE: dict = {}
-
-
-def _train_cache_put(key: tuple, df: DataFrame) -> DataFrame:
-    """Insert a trained artifact, evicting entries for OTHER
-    (application, sf_dir) scopes first (ADVICE r11: the cache holds
-    eagerly pinned localCheckpoints; a long-lived session iterating
-    many sf_dirs would otherwise accumulate pinned executor blocks
-    forever). Within one (app, sf_dir) at most len(kinds)=3 entries
-    live — bounded by construction."""
-    for k in [k for k in _TRAIN_CACHE if k[:2] != key[:2]]:
-        # dropping the last reference is the release mechanism for a
-        # localCheckpoint (it is NOT in the CacheManager, so unpersist()
-        # would be a no-op): Spark's ContextCleaner unpersists the
-        # pinned RDD blocks once the driver-side reference is GC'd
-        del _TRAIN_CACHE[k]
-    _TRAIN_CACHE[key] = df
-    return df
-
-
 def table_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The default-hyperparameter coarse quantizer over the embeddings
-    TABLE, trained once per (application, sf_dir) and shared by every
-    declared key that routes through it — the basket_edges fixture-reuse
-    discipline (operators/graph.py): six keys train the IDENTICAL
-    quantizer (same corpus, same seeded init, same Lloyd steps), so per
-    session it is one artifact, pinned by ivf_train's own eager
-    checkpoint (≤ nlist·d rows — bounded state). Keys that train on
-    anything other than the raw table (e.g. q_sim_ivfpq_topk's
-    residual PQ) keep calling ivf_train/pq_train directly."""
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf")
-    hit = _TRAIN_CACHE.get(key)
-    if hit is None:
-        ve = _table_ve(spark, sf_dir)
-        hit = _train_cache_put(key, ivf_train(ve))
-    return hit
+    TABLE, trained once per (application, sf_dir) into the
+    session-artifact store (io.artifact) and shared by every declared
+    key that routes through it: six keys train the IDENTICAL quantizer
+    (same corpus, same seeded init, same Lloyd steps), so per session it
+    is one artifact, pinned by ivf_train's own eager checkpoint
+    (≤ nlist·d rows — bounded state) and dropped with its scope. Keys
+    that train on anything other than the raw table (e.g.
+    q_sim_ivfpq_topk's residual PQ) store their own kind."""
+    return artifact(
+        spark, sf_dir, "ivf", lambda: ivf_train(_table_ve(spark, sf_dir))
+    )
 
 
 def table_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-vector PQ codebooks over the embeddings TABLE — the
-    table_ivf_train discipline for the two keys that share them."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pq")
-    hit = _TRAIN_CACHE.get(key)
-    if hit is None:
-        ve = _table_ve(spark, sf_dir)
-        hit = _train_cache_put(key, pq_train(ve))
-    return hit
+    """Raw-vector PQ codebooks over the embeddings TABLE — stored like
+    table_ivf_train for the two keys that share them."""
+    return artifact(spark, sf_dir, "pq", lambda: pq_train(_table_ve(spark, sf_dir)))
 
 
 def _table_ve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -946,14 +918,14 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     # the residual-PQ codebook is deterministic per (app, sf_dir) —
     # coarse quantizer, residuals, and the seeded Lloyd steps all are —
-    # so train it once per session like table_ivf_train/table_pq_train
-    # (guide §4.3 heavyweight init once; bounded n_subs·k-row artifact,
-    # pinned by pq_train's own eager checkpoint). Residuals themselves
-    # stay per-run: only the trained MODEL is shared, never data.
-    rkey = (spark.sparkContext.applicationId, sf_dir, "pq_resid")
-    cents = _TRAIN_CACHE.get(rkey)
-    if cents is None:
-        cents = _train_cache_put(rkey, pq_train(resid.select("vec_id", "vec")))
+    # so it is trained once into the session-artifact store beside the
+    # coarse quantizer (guide §4.3 heavyweight init once; bounded
+    # n_subs·k-row artifact, pinned by pq_train's own eager checkpoint).
+    # Residuals themselves stay per-run: only the trained MODEL is
+    # shared, never data.
+    cents = artifact(
+        spark, sf_dir, "pq_resid", lambda: pq_train(resid.select("vec_id", "vec"))
+    )
     codes = pq_encode(resid.select("vec_id", "vec"), cents).select(
         F.col("vec_id").alias("cand_id"), "s", "code"
     )

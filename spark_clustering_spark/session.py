@@ -24,6 +24,12 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, never above 16g."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "spark-clustering-engine",
     master: str | None = None,
@@ -41,7 +47,8 @@ def get_spark(
         # local mode = one JVM: the 1g default heap caps every cache and
         # shuffle; size it to the machine (only applies at JVM launch)
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
         )
         # Whole-stage-codegen class cache (static conf, default 100
         # entries). This engine serves a 322-query inventory from one

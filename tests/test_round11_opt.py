@@ -1,9 +1,9 @@
 """Round-11 optimization invariants.
 
 The round-11 changes must be plan-only: the wedge-family broadcast
-small path, the shared trained-quantizer cache, and the codegen-cache
-static conf may change HOW results are computed, never WHAT. These
-tests pin that contract at sf0.001.
+small path, the trained quantizers shared through the session-artifact
+store, and the codegen-cache static conf may change HOW results are
+computed, never WHAT. These tests pin that contract at sf0.001.
 """
 
 from __future__ import annotations
@@ -42,7 +42,8 @@ def test_wedge_small_path_matches_shuffle_path(spark):
 
 def test_trainer_cache_identical_to_fresh_training(spark):
     """table_ivf_train/table_pq_train must return exactly what a fresh
-    inline training returns, and must be a per-(app, sf_dir) singleton."""
+    inline training returns, and the store must serve one artifact per
+    (app, sf_dir) scope and kind."""
     from spark_clustering_spark.pipeline import similarity as s
 
     cached = s.table_ivf_train(spark, SF_SMALL)
