@@ -122,3 +122,20 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])
     return df.repartition(target)
+
+
+def shuffle_width(spark: SparkSession, rows: int = 0, rows_per_task: int = 1) -> int:
+    """The partition count of an explicit shuffle: the session's
+    explicitly set ``spark.sql.shuffle.partitions``, else
+    ``max(defaultParallelism, 8)`` (``session.get_spark``'s default),
+    raised to ``ceil(rows / rows_per_task)`` so per-task work stays
+    bounded as the input grows.
+
+    The unset case deliberately ignores Spark's own default of 200:
+    several callers use the width as a replication factor (salted joins
+    replicate one side ``width`` times, blocked cross joins ``4·width``
+    times), where 200 would multiply rows, not just tasks."""
+    base = spark.conf.get("spark.sql.shuffle.partitions", None)
+    if base is None:
+        base = max(spark.sparkContext.defaultParallelism, 8)
+    return max(int(base), -(-rows // rows_per_task))

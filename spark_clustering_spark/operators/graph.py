@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_clustering_spark.functions.detagg import dround, sql_dround
-from spark_clustering_spark.io import artifact, table
+from spark_clustering_spark.io import artifact, shuffle_width, table
 from spark_clustering_spark.registry import query
 
 PR_DAMPING = 0.85
@@ -123,8 +123,7 @@ def _build_edges(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     n_li = table(spark, sf_dir, "lineitem").count()  # parquet-metadata fast
     pairs = a.join(b, "o").filter(F.col("u") < F.col("v")).select("u", "v")
     if n_li >= 10_000_000:
-        width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        width = min(4096, max(width, -(-n_li // 250_000)))
+        width = min(4096, shuffle_width(spark, n_li, 250_000))
         return pairs.repartition(width, "u", "v").distinct().localCheckpoint(eager=True)
     else:
         # Small path: planner-placed dedup, LAZY checkpoint (pinned on
@@ -394,10 +393,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_triangles"))
         )
     else:
-        width = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            -(-n_edges_m // 75_000),  # ceil: ~75k edges per closure task
-        )
+        width = shuffle_width(spark, n_edges_m, 75_000)  # ~75k edges per task
         o1 = o.select(F.col("s").alias("x"), F.col("t").alias("y")).repartition(
             width, "y"
         )
@@ -890,10 +886,7 @@ def q_graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]["w"]
             or 0
         )
-        width = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            -(-int(n_wedges) // 1_000_000),  # ceil: ~1M wedge rows per task
-        )
+        width = shuffle_width(spark, int(n_wedges), 1_000_000)  # ~1M wedges/task
         wedge = (
             wa.join(wb, "node")
             .filter(F.col("u") < F.col("v"))
@@ -1177,10 +1170,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()[0]["w2"]
             or 0
         )
-        width = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            -(-int(n_wedges) // 1_000_000),  # ceil: ~1M wedge rows per task
-        )
+        width = shuffle_width(spark, int(n_wedges), 1_000_000)  # ~1M wedges/task
         wedge = (
             wa.join(wb, "node")
             .filter(F.col("u") < F.col("v"))

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from spark_clustering_spark.functions.detagg import dround, dsum, sql_dround, sql_dsum
 from spark_clustering_spark.functions.rng import lcg_uniform, sql_lcg_uniform
-from spark_clustering_spark.io import spread, table
+from spark_clustering_spark.io import shuffle_width, spread, table
 from spark_clustering_spark.registry import query
 
 
@@ -180,7 +180,7 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     split count (ONE split at sf10) — so p1 is explicitly
     round-robin-repartitioned to `width` BEFORE the explode, the same
     probe-parallelism fix as q_join_nullsafe."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = shuffle_width(spark)
     p1 = (
         table(spark, sf_dir, "part")
         .select("p_partkey", "p_brand", "p_size")
@@ -462,7 +462,7 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe partitions that AQE will not coalesce; in the at-scale
     shuffle fallback the same exchange is the join's required
     distribution, so it is reused, not duplicated."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = shuffle_width(spark)
     c = (
         table(spark, sf_dir, "customer")
         .select(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_clustering_spark.functions.detagg import dround, sql_dround
-from spark_clustering_spark.io import register_temp_views, table
+from spark_clustering_spark.io import register_temp_views, shuffle_width, table
 from spark_clustering_spark.registry import query
 
 
@@ -299,9 +299,7 @@ def global_running_agg(
     calls) is computed three times.
     """
     if num_partitions is None:
-        num_partitions = max(
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8")), 2
-        )
+        num_partitions = max(shuffle_width(df.sparkSession), 2)
     d = df.withColumn("_pid", _slice_ids(df, order_cols, num_partitions))
     slice_aggs = []
     for out, (kind, expr) in aggs.items():

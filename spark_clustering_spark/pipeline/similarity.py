@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 from spark_clustering_spark.functions.detagg import DEC, dround, sql_dround
 from spark_clustering_spark.functions.distance import as_double_array, cosine, dot_dec
 from spark_clustering_spark.functions.rng import py_lcg_uniform
-from spark_clustering_spark.io import artifact, table
+from spark_clustering_spark.io import artifact, shuffle_width, table
 from spark_clustering_spark.registry import query
 
 N_PROBES = 5
@@ -1522,7 +1522,7 @@ def _blocked_cross(a: DataFrame, b: DataFrame, b_key: str) -> DataFrame:
     the caller's (identical) scoring expressions, so results are
     bit-identical to the broadcast form."""
     spark = a.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = shuffle_width(spark)
     n_blocks = 4 * width  # ≥4 keys per reducer: evens out hash collisions
     blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))
     a_rep = a.crossJoin(F.broadcast(blocks)).repartition(width, F.col("_blk"))
@@ -2014,7 +2014,7 @@ def q_sim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("cn"),
         F.col("nrm_t").alias("cn_t"),
     )
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = shuffle_width(spark)
     scored = (
         corpus.repartition(width)
         .crossJoin(F.broadcast(probes))
@@ -2371,7 +2371,7 @@ def q_sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("cn"),
         F.col("nrm_t").alias("cn_t"),
     )
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = shuffle_width(spark)
     scored = (
         corpus.repartition(width)
         .crossJoin(F.broadcast(probes))

@@ -9,8 +9,10 @@ on ``local[*]``:
   decode) moves data in columnar batches instead of pickled rows.
 - UTC session timezone: deterministic timestamp semantics that match the
   DuckDB correctness oracle.
-- shuffle partitions default to the local core count; on a real cluster
+- shuffle partitions default to ``max(cores, 8)``; on a real cluster
   this would be set to ~2-3x total executor cores (AQE coalesces down).
+  Query code reads the width only through ``io.shuffle_width``, which
+  applies the same default when a caller's session leaves it unset.
 """
 
 from __future__ import annotations

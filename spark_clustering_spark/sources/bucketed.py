@@ -77,23 +77,6 @@ def bucketed_table_names(sf_dir: str) -> dict:
     return {"orders": f"orders_b_{tag}", "lineitem": f"lineitem_b_{tag}"}
 
 
-class no_broadcast:
-    """Context manager forcing the large-large join path (the realistic
-    100 TB case — neither side broadcastable). At test scale Spark would
-    otherwise broadcast the small side and skip the bucketed scan."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", self.prev)
-
-
 def colocated_order_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders_b ⋈ lineitem_b on the bucket key: bucket-to-bucket local
     sort-merge join — zero shuffle exchanges on either side (both are
@@ -131,7 +114,7 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables are written bucketBy(8) + sortBy on the order key (external
     tables in a tempdir), then joined bucket-to-bucket — a local
     sort-merge with ZERO Exchange nodes on either side (asserted in
-    tests/test_scale.py with broadcast disabled). This is THE layout
+    tests/test_scale.py under a sort-merge join hint). This is THE layout
     decision for the dominant 100 TB join: the shuffle is paid once at
     write time and amortized over every subsequent join; the answer is
     bit-identical to the unbucketed plan (this oracle).

@@ -23,7 +23,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import shuffle_width, table
 
 EVENT_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
@@ -67,9 +67,14 @@ def write_replay_chunks(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     jobs = list(enumerate(range(0, n, chunk)))
+    # the wrapper carries the caller's job group, local properties and
+    # tags into the pool threads; plain threads submit ungrouped jobs
+    write_one = inheritable_thread_target(df.sparkSession)(_write_one)
     with ThreadPoolExecutor(max_workers=min(len(jobs), 8)) as pool:
-        dirs = list(pool.map(_write_one, jobs))
+        dirs = list(pool.map(write_one, jobs))
     base = time.time()
     for ci, cdir in enumerate(dirs):
         for root, _, files in os.walk(cdir):
@@ -88,6 +93,27 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 8) -> str:
     write_replay_chunks(ev, "event_id", out, n_chunks)
     ev.unpersist()
     return out
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """A private session for a stateful stream, sharing ``spark``'s
+    context but not its conf.
+
+    A stateful operator's state-shard count is the shuffle-partition
+    count of the session the stream STARTS in, fixed for the query's
+    life: a ``repartition`` cannot set it. Each micro-batch pays a task
+    and a state commit per shard, so Spark's unset default of 200 costs
+    far more than the rows do at this scale. Setting the width on a
+    session only the stream uses scopes it without touching the
+    caller's conf or racing concurrent jobs on the shared session. The
+    session time zone is copied because the Arrow batches handed to
+    pandas state functions render timestamps in it."""
+    private = spark.newSession()
+    private.conf.set(
+        "spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone")
+    )
+    private.conf.set("spark.sql.shuffle.partitions", str(shuffle_width(spark)))
+    return private
 
 
 def _read_stream(spark: SparkSession, replay: str) -> DataFrame:
@@ -359,7 +385,7 @@ def stream_upsert(
             F.get_json_object("props", "$.k").cast("bigint").alias("k"),
         )
         if state["cur"] is not None:
-            new = new.unionByName(spark.read.parquet(state["cur"]))
+            new = new.unionByName(batch_df.sparkSession.read.parquet(state["cur"]))
         # last-writer-wins as ONE hash aggregate instead of a window
         # (sort + full-row shuffle): max_by on the (ts, event_id)
         # total order picks the same winner row as row_number()=1 over
@@ -385,25 +411,14 @@ def stream_upsert(
         state["flip"] = 1 - state["flip"]
 
     ck = _tf.mkdtemp(prefix="stream_upsert_ck_")
-    # Scope the per-micro-batch shuffle to the state shard count (the
-    # same scaling note as run_user_engagement in stateful.py): each
-    # batch pays tasks × batches of scheduling + a state-file rewrite
-    # per shard, and the merge's cost driver at this scale is shard
-    # overhead, not rows. On a real deployment this rises with key
-    # cardinality and input rate — never left at the batch default.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            _read_stream(spark, replay)
-            .writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        _drain(q)  # guarded: never rmtree under a live FileStreamSource
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    q = (
+        _read_stream(stream_session(spark), replay)
+        .writeStream.foreachBatch(handle)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    _drain(q)  # guarded: never rmtree under a live FileStreamSource
     # the CURRENT state dir must survive (the returned df reads it
     # lazily); the drained query's checkpoint and the stale alternate
     # state dir are dead weight (ADVICE r5 tempdir hygiene)

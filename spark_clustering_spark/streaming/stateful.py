@@ -68,23 +68,13 @@ def run_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         _read_stream,
         _run_to_completion,
         replay_dir,
+        stream_session,
     )
 
-    # Scope the state-store shard count to the keyspace: the shuffle
-    # partition count at stream start fixes the number of state-store
-    # partitions PER MICRO-BATCH, and each micro-batch pays per-shard
-    # task + state-commit overhead — the cost driver here is batches ×
-    # shards, not rows. At 100 TB you'd raise both with key cardinality
-    # and input rate, not leave them at the batch defaults.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        replay = replay_dir(spark, sf_dir, n_chunks=2)
-        src = _read_stream(spark, replay)
-        out = user_engagement_stream(src.select("user_id", "ts", "value"))
-        res = _run_to_completion(out, "update", f"engage_{id(src)}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    replay = replay_dir(spark, sf_dir, n_chunks=2)
+    src = _read_stream(stream_session(spark), replay)
+    out = user_engagement_stream(src.select("user_id", "ts", "value"))
+    res = _run_to_completion(out, "update", f"engage_{id(src)}")
     # update mode emits one row per user per batch: keep the final state
     from pyspark.sql.window import Window
 

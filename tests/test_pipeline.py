@@ -613,6 +613,39 @@ class TestSpread:
         df = spark.range(1000, numPartitions=target + 4)
         assert spread(df) is df
 
+    @staticmethod
+    def _width_under(spark, value, *args):
+        """shuffle_width with the session's width set to ``value`` (None
+        = unset), restoring the session's own setting afterwards."""
+        from spark_clustering_spark.io import shuffle_width
+
+        key = "spark.sql.shuffle.partitions"
+        saved = spark.conf.get(key, None)
+        try:
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, str(value))
+            return shuffle_width(spark, *args)
+        finally:
+            if saved is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, saved)
+
+    def test_shuffle_width_explicit_value_as_is(self, spark):
+        assert self._width_under(spark, 3) == 3
+        assert self._width_under(spark, 300) == 300
+
+    def test_shuffle_width_unset_uses_session_default(self, spark):
+        expected = max(spark.sparkContext.defaultParallelism, 8)
+        assert self._width_under(spark, None) == expected
+
+    def test_shuffle_width_rows_ceiling_wins_when_larger(self, spark):
+        assert self._width_under(spark, 32, 10_001, 100) == 101
+        assert self._width_under(spark, 32, 3_200, 100) == 32
+        assert self._width_under(spark, None, 10_001, 100) == 101
+
 
 class TestRound4bOps:
     """Invariants for the SemDeDup / MV / DSIR / Gopher / CCNet /

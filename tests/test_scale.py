@@ -14,21 +14,24 @@ def test_bucketed_join_has_no_exchange(spark):
     from spark_clustering_spark.sources.bucketed import (
         bucketed_table_names,
         create_bucketed_tables,
-        no_broadcast,
     )
 
     create_bucketed_tables(spark, SF_SMALL)
     names = bucketed_table_names(SF_SMALL)
-    with no_broadcast(spark):
-        join_plan = formatted_plan(
-            spark.table(names["orders"]).join(
-                spark.table(names["lineitem"]),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
+    # the merge hint asks the planner for the large-large join path
+    # (the 100 TB case, neither side broadcastable); at test scale it
+    # would otherwise broadcast the small side and skip the bucketed scan
+    join_plan = formatted_plan(
+        spark.table(names["orders"])
+        .hint("merge")
+        .join(
+            spark.table(names["lineitem"]),
+            F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        assert "Exchange" not in join_plan, join_plan[:1500]
-        assert "SortMergeJoin" in join_plan
-        assert "Bucketed: true" in join_plan
+    )
+    assert "Exchange" not in join_plan, join_plan[:1500]
+    assert "SortMergeJoin" in join_plan
+    assert "Bucketed: true" in join_plan
     # and the result matches the unbucketed join
     from spark_clustering_spark.io import table
 
@@ -74,10 +77,19 @@ def test_stateful_user_engagement(spark):
     from spark_clustering_spark.io import table
     from spark_clustering_spark.streaming.stateful import run_user_engagement
 
-    final = {
-        r["user_id"]: (r["n_events"], r["sum_cents"])
-        for r in run_user_engagement(spark, SF_SMALL).collect()
-    }
+    # run on a session whose width is unset: the stream must leave the
+    # caller's conf as it found it
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)  # the fixture's session sets it explicitly
+    spark.conf.unset(key)
+    try:
+        final = {
+            r["user_id"]: (r["n_events"], r["sum_cents"])
+            for r in run_user_engagement(spark, SF_SMALL).collect()
+        }
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, saved)
     expected = {
         r["user_id"]: (r["n"], r["s"])
         for r in table(spark, SF_SMALL, "events")

@@ -252,12 +252,43 @@ def test_stream_upsert_matches_batch_collapse(spark):
     }
     assert got == ref  # chunking-invariant last-writer-wins
 
-    # different chunking, same final state (associativity)
-    got3 = {
-        r.user_id: (r.last_ts, r.last_type, r.last_k)
-        for r in stream_upsert(spark, sf, n_chunks=3).collect()
-    }
+    # different chunking, same final state (associativity); run on a
+    # session whose width is unset, which the stream must leave unset
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)  # the fixture's session sets it explicitly
+    spark.conf.unset(key)
+    try:
+        got3 = {
+            r.user_id: (r.last_ts, r.last_type, r.last_k)
+            for r in stream_upsert(spark, sf, n_chunks=3).collect()
+        }
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, saved)
     assert got3 == ref
+
+
+def test_replay_chunk_writes_keep_callers_job_group(spark, tmp_path):
+    """The concurrent chunk writes run from a driver thread pool; every
+    job they submit must carry the caller's job group, as the serial
+    loop's jobs would."""
+    from spark_clustering_spark.streaming.harness import write_replay_chunks
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    df = spark.range(0, 700).withColumnRenamed("id", "row_id").persist()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("replay_chunks", "write_replay_chunks job-group test")
+    try:
+        write_replay_chunks(df, "row_id", str(tmp_path / "replay"), 7)
+    finally:
+        sc._jsc.clearJobGroup()
+        df.unpersist()
+    bus.waitUntilEmpty()
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert len(tracker.getJobIdsForGroup("replay_chunks")) >= 8
 
 
 def test_stream_kmeans_matches_mllib_streaming_kmeans(spark):

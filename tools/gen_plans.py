@@ -301,23 +301,22 @@ def main() -> None:
         tree = plan.split("\n\n")[0]
         lines += [f"## {name}", "", note, "", "```", tree, "```", ""]
 
-    # bucketed join (needs the bucketed tables + no-broadcast context)
+    # bucketed join (needs the bucketed tables + a sort-merge hint, so
+    # the small side is not broadcast past the bucketed scan)
     from pyspark.sql import functions as F
 
     from spark_clustering_spark.sources.bucketed import (
         bucketed_table_names,
         create_bucketed_tables,
-        no_broadcast,
     )
 
     create_bucketed_tables(spark, SF)
     names = bucketed_table_names(SF)
-    with no_broadcast(spark):
-        j = spark.table(names["orders"]).join(
-            spark.table(names["lineitem"]),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        tree = formatted_plan(j).split("\n\n")[0]
+    j = spark.table(names["orders"]).hint("merge").join(
+        spark.table(names["lineitem"]),
+        F.col("o_orderkey") == F.col("l_orderkey"),
+    )
+    tree = formatted_plan(j).split("\n\n")[0]
     lines += [
         "## bucketed orders ⋈ lineitem",
         "",

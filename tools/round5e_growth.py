@@ -57,7 +57,7 @@ def main() -> None:
         as_double_array,
         dot_dec,
     )
-    from spark_clustering_spark.io import table
+    from spark_clustering_spark.io import shuffle_width, table
     from spark_clustering_spark.pipeline.similarity import KNN_K, KNN_MOD
     from spark_clustering_spark.session import get_spark
 
@@ -113,7 +113,7 @@ def main() -> None:
                     dot_dec(F.col("vec"), F.col("vec")).cast("double")
                 ).alias("na"),
             )
-            width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+            width = shuffle_width(spark)
             corpus = n.select(
                 F.col("vec_id").alias("dst"),
                 F.col("label").alias("lbl"),
@@ -191,10 +191,7 @@ def main() -> None:
                 ).collect()[0]["w2"]
                 or 0
             )
-            width = max(
-                int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                -(-int(n_wedges) // 1_000_000),
-            )
+            width = shuffle_width(spark, int(n_wedges), 1_000_000)
             wa = adj.select("node", F.col("nbr").alias("u"))
             wb = adj.select("node", F.col("nbr").alias("v"))
             wedge = (

@@ -34,7 +34,7 @@ def main() -> None:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window  # noqa: F401
 
-    from spark_clustering_spark.io import table
+    from spark_clustering_spark.io import shuffle_width, table
     from spark_clustering_spark.session import get_spark
 
     spark = get_spark("triangle_growth")
@@ -84,10 +84,7 @@ def main() -> None:
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
         n_edges = e.count()
-        width = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            -(-n_edges // 75_000),  # same count-derived width as the operator
-        )
+        width = shuffle_width(spark, n_edges, 75_000)  # as the operator
         o1 = o.select(F.col("s").alias("x"), F.col("t").alias("y")).repartition(
             width, "y"
         )
