@@ -50,18 +50,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-# --- DuckDB oracle fragments (kept beside the Spark exprs so they can't
-# drift). DuckDB evaluates list ops left-to-right as well; both sides
-# compute in double after the explicit casts.
-
-def sql_euclidean(a: str, b: str) -> str:
-    return f"list_distance(({a})::DOUBLE[], ({b})::DOUBLE[])"
-
-
-def sql_cosine(a: str, b: str) -> str:
-    return f"list_cosine_similarity(({a})::DOUBLE[], ({b})::DOUBLE[])"
-
-
 def dot_dec(a: Column, b: Column) -> Column:
     """Dot product accumulated in exact scale-8 decimal — bit-identical
     to a grouped `sum(cast(x*y AS DECIMAL(38,8)))` over exploded

@@ -9,7 +9,9 @@ pruning and predicate pushdown (``.explain`` shows ``PushedFilters`` /
 from __future__ import annotations
 
 import os
+import shutil
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,8 +93,23 @@ def release() -> None:
     _ARTIFACTS.clear()
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
+def scratch(name: str) -> str:
+    """An empty directory for the files a query writes and reads back,
+    at ``<SparkFiles root>/engine-scratch/<name>``; whatever an earlier
+    call left under ``name`` is deleted first.
+
+    One lifetime rule: a name's directory lives until the same name is
+    asked for again or until the application stops. The SparkFiles root
+    sits under ``spark.local.dir`` and Spark deletes it on
+    ``spark.stop()``. PySpark also puts that root on the driver's
+    ``sys.path``, hence the hyphenated subdirectory: no name under it
+    can ever be imported as a module. A directory that a returned frame
+    reads lazily is named by its query key (a catalog table's by the
+    table name), so no two keys share one."""
+    path = os.path.join(SparkFiles.getRootDirectory(), "engine-scratch", name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

@@ -27,7 +27,7 @@ engines; ties in the argmin break on the lower centroid id.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -302,10 +302,6 @@ def q_best_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist.select(
         "iter", "objective", F.min("objective").over(w).alias("best_so_far")
     )
-
-
-def _wheel_cols(cum: Column, total: Column) -> Column:
-    return F.round(cum / total, 4)
 
 
 @query(

@@ -27,10 +27,6 @@ def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
-def simple_plan(df: DataFrame) -> str:
-    return _explain(df, "simple")
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Filter predicates that reached a parquet scan."""
     out: list[str] = []
@@ -89,8 +85,3 @@ def broadcast_subtrees(df: DataFrame) -> list[str]:
         else:
             i += 1
     return out
-
-
-def codegen_span_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen regions — wider spans = more fused."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))

@@ -11,60 +11,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import scratch, table
 from spark_clustering_spark.registry import query
 
 N_BUCKETS = 8
 
 
-def _clear_stale_location(spark: SparkSession, name: str) -> None:
-    """A crashed prior run can leave the managed location on disk with
-    no catalog entry — saveAsTable then refuses. Drop both."""
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-
-
 def create_bucketed_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    n_buckets: int = N_BUCKETS,
-    location_base: str | None = None,
+    spark: SparkSession, sf_dir: str, n_buckets: int = N_BUCKETS
 ) -> None:
     """Write orders + lineitem bucketed (and sorted) by the order key.
     Idempotent PER SOURCE DIR: the table names carry an sf_dir
     fingerprint, so two sf_dirs in one session never alias each other's
     buckets (they'd silently serve stale data otherwise), while a rerun
-    on the same sf_dir reuses the existing tables. ``location_base``
-    makes them EXTERNAL tables at that path — the declared query uses a
-    tempdir (created only when a write actually happens) so the write
-    never depends on the session's warehouse directory (vanilla driver
-    sessions point it at their own cwd)."""
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    on the same sf_dir reuses the existing tables. Each table is
+    EXTERNAL, in the scratch dir of its own name, so the write never
+    depends on the session's warehouse directory (vanilla driver
+    sessions point it at their own cwd) and a table's files live as
+    long as the application that catalogs it."""
     names = bucketed_table_names(sf_dir)
     existing = {t.name for t in spark.catalog.listTables()}
-    todo = [
-        (names["orders"], "orders", "o_orderkey"),
-        (names["lineitem"], "lineitem", "l_orderkey"),
-    ]
-    todo = [t for t in todo if t[0] not in existing]
-    if not todo:
-        return
-    if location_base is None:
-        location_base = tempfile.mkdtemp(prefix=f"bucketed_{tag}_")
-    for name, src, key in todo:
-        _clear_stale_location(spark, name)
+    for src, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        name = names[src]
+        if name in existing:
+            continue
         (
             table(spark, sf_dir, src)
             .write.bucketBy(n_buckets, key)
             .sortBy(key)
             .mode("overwrite")
-            .option("path", f"{location_base}/{name}")
+            .option("path", scratch(name))
             .saveAsTable(name)
         )
 
@@ -112,7 +88,7 @@ def colocated_order_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-layout sink + shuffle-free join read-back: both fact
     tables are written bucketBy(8) + sortBy on the order key (external
-    tables in a tempdir), then joined bucket-to-bucket — a local
+    tables in scratch dirs), then joined bucket-to-bucket — a local
     sort-merge with ZERO Exchange nodes on either side (asserted in
     tests/test_scale.py under a sort-merge join hint). This is THE layout
     decision for the dominant 100 TB join: the shuffle is paid once at

@@ -10,18 +10,16 @@ scan.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import scratch, table
 
 
 def write_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events partitioned by event_date (one directory per
     day). Returns the output path."""
-    out = tempfile.mkdtemp(prefix="events_partitioned_")
+    out = scratch("events_partitioned")
     ev = table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )

@@ -16,14 +16,12 @@ streaming results and the strict batch emulations).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_clustering_spark.io import shuffle_width, table
+from spark_clustering_spark.io import scratch, shuffle_width, table
 
 EVENT_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
@@ -87,8 +85,10 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 8) -> str:
     a deterministic arrival-order replay source. Chunks are cut by
     event_id range and written distributed (only the 1-row max-id
     aggregate touches the driver), so the harness itself scales with
-    the source instead of materializing it driver-side."""
-    out = tempfile.mkdtemp(prefix="stream_replay_")
+    the source instead of materializing it driver-side. Every replay
+    shares one scratch name: a replay is read only while its stream
+    drains, so the next replay may replace it."""
+    out = scratch("stream_replay")
     ev = table(spark, sf_dir, "events").persist()
     write_replay_chunks(ev, "event_id", out, n_chunks)
     ev.unpersist()
@@ -125,11 +125,13 @@ def _read_stream(spark: SparkSession, replay: str) -> DataFrame:
 
 
 def _run_to_completion(
-    stream_df: DataFrame, output_mode: str, name: str, cleanup: str | None = None
+    stream_df: DataFrame, output_mode: str, name: str
 ) -> DataFrame:
-    """Drain the stream into a memory sink; once drained, the replay
-    dir (``cleanup``) is no longer read and is removed (ADVICE r5:
-    harness tempdirs used to accumulate for the session lifetime)."""
+    """Drain the stream into a memory sink and return its rows. The
+    sink is named by its call site, so a rerun replaces the temp view
+    instead of adding one; a frame returned earlier keeps reading its
+    own sink. Once drained, the stream's replay dir is no longer read
+    and the next ``scratch`` of its name may delete it."""
     spark = stream_df.sparkSession
     q = (
         stream_df.writeStream.format("memory")
@@ -139,8 +141,6 @@ def _run_to_completion(
         .start()
     )
     _drain(q)
-    if cleanup:
-        shutil.rmtree(cleanup, ignore_errors=True)
     return spark.table(name)
 
 
@@ -148,10 +148,10 @@ def _drain(q, timeout: int = 300) -> bool:
     """awaitTermination with the slow-drain guard (ADVICE r6, applied
     to EVERY harness drain in r8 — the q_stream_upsert path had its
     own unguarded copy): if the drain exceeds the timeout, stop the
-    query BEFORE the caller touches its source dir — deleting a live
-    FileStreamSource's input turns a benign partial-result timeout
-    into a stream failure. Returns whether the query terminated on
-    its own."""
+    query BEFORE its source dir can go — the next ``scratch`` of the
+    replay's name deletes it, and deleting a live FileStreamSource's
+    input turns a benign partial-result timeout into a stream failure.
+    Returns whether the query terminated on its own."""
     terminated = q.awaitTermination(timeout)
     if not terminated:
         q.stop()
@@ -172,7 +172,7 @@ def stream_tumbling_counts(
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    res = _run_to_completion(agg, "append", f"tumbling_{id(src)}", cleanup=replay)
+    res = _run_to_completion(agg, "append", "stream_tumbling")
     return res.select(
         F.unix_timestamp(F.col("w.start")).cast("bigint").alias("win_start"),
         "event_type",
@@ -221,7 +221,7 @@ def stream_dedup(
     dedup = src.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    res = _run_to_completion(dedup, "append", f"dedup_{id(src)}", cleanup=replay)
+    res = _run_to_completion(dedup, "append", "stream_dedup")
     return res.select("user_id", "event_type", "event_id", "ts")
 
 
@@ -261,7 +261,7 @@ def stream_stream_join(
         & (F.col("c_ts") > F.col("v_ts"))
         & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 4 HOURS")),
     )
-    res = _run_to_completion(j, "append", f"ssjoin_{id(j)}", cleanup=replay)
+    res = _run_to_completion(j, "append", "stream_stream_join")
     return res.select(
         "view_id",
         "click_id",
@@ -295,7 +295,7 @@ def stream_cluster_volume(
             (F.col("vec_id") / 100).cast("bigint") * 3600
         ).alias("ts"),
     )
-    out = tempfile.mkdtemp(prefix="cluster_replay_")
+    out = scratch("cluster_replay")
     # persist: the assign pipeline would otherwise recompute once per
     # chunk write plus once for the max-id probe (9 full jobs)
     timed = timed.persist()
@@ -311,7 +311,7 @@ def stream_cluster_volume(
         .groupBy(F.window("ts", "1 hour").alias("w"), "cluster_id")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
-    res = _run_to_completion(agg, "append", f"clustervol_{id(src)}", cleanup=out)
+    res = _run_to_completion(agg, "append", "stream_cluster_volume")
     return res.select(
         F.unix_timestamp(F.col("w.start")).cast("bigint").alias("win_start"),
         "cluster_id",
@@ -334,7 +334,7 @@ def stream_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     agg = src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    res = _run_to_completion(agg, "complete", f"topk_{id(src)}", cleanup=replay)
+    res = _run_to_completion(agg, "complete", "stream_topk")
     wr = Window.partitionBy("w").orderBy(
         F.col("n_events").desc(), F.col("event_type")
     )
@@ -368,11 +368,11 @@ def stream_upsert(
     compaction loop; state is one row per live key, and on a real
     lakehouse the rewrite narrows to the key-partitions the batch
     touched (Hudi/Delta merge semantics). Alternating state dirs
-    avoid read-overwrite races."""
-    import tempfile as _tf
-
+    avoid read-overwrite races. The state dirs and the checkpoint live
+    in the ``q_stream_upsert`` scratch dir: the returned frame reads the
+    current state lazily, so it stays until the next call."""
     replay = replay_dir(spark, sf_dir, n_chunks=n_chunks)
-    base = _tf.mkdtemp(prefix="stream_upsert_")
+    base = scratch("q_stream_upsert")
     dirs = [os.path.join(base, "a"), os.path.join(base, "b")]
     state = {"cur": None, "flip": 0}
 
@@ -410,23 +410,14 @@ def stream_upsert(
         state["cur"] = nxt
         state["flip"] = 1 - state["flip"]
 
-    ck = _tf.mkdtemp(prefix="stream_upsert_ck_")
     q = (
         _read_stream(stream_session(spark), replay)
         .writeStream.foreachBatch(handle)
         .trigger(availableNow=True)
-        .option("checkpointLocation", ck)
+        .option("checkpointLocation", os.path.join(base, "ck"))
         .start()
     )
-    _drain(q)  # guarded: never rmtree under a live FileStreamSource
-    # the CURRENT state dir must survive (the returned df reads it
-    # lazily); the drained query's checkpoint and the stale alternate
-    # state dir are dead weight (ADVICE r5 tempdir hygiene)
-    shutil.rmtree(replay, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    stale = dirs[1 - dirs.index(state["cur"])] if state["cur"] in dirs else None
-    if stale:
-        shutil.rmtree(stale, ignore_errors=True)
+    _drain(q)
     final = spark.read.parquet(state["cur"])
     return final.filter(F.col("event_type") != "error").select(
         "user_id",
@@ -450,7 +441,7 @@ def stream_sliding_counts(
     agg = src.groupBy(
         F.window("ts", "30 minutes", "10 minutes").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    res = _run_to_completion(agg, "complete", f"sliding_{n_chunks}_{id(src)}", cleanup=replay)
+    res = _run_to_completion(agg, "complete", f"stream_sliding_{n_chunks}")
     return res.select(
         F.unix_timestamp(F.col("w.start")).cast("bigint").alias("win_start"),
         "event_type",
@@ -472,7 +463,7 @@ def stream_session_counts(
     agg = src.groupBy(
         F.session_window("ts", "30 minutes").alias("w"), "user_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    res = _run_to_completion(agg, "complete", f"session_{n_chunks}_{id(src)}", cleanup=replay)
+    res = _run_to_completion(agg, "complete", f"stream_session_{n_chunks}")
     return res.select(
         "user_id",
         F.unix_timestamp(F.col("w.start")).cast("bigint").alias("session_start"),
@@ -494,7 +485,7 @@ def stream_enrich_counts(
     agg = j.groupBy(F.window("ts", "1 hour").alias("w"), "c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    res = _run_to_completion(agg, "complete", f"enrich_{n_chunks}_{id(src)}", cleanup=replay)
+    res = _run_to_completion(agg, "complete", f"stream_enrich_{n_chunks}")
     return res.select(
         F.unix_timestamp(F.col("w.start")).cast("bigint").alias("win_start"),
         F.col("c_mktsegment").alias("segment"),

@@ -32,13 +32,12 @@ stream length — the same inversion as the batch fits (R19).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_clustering_spark.io import scratch
 from spark_clustering_spark.ml.kernels import lloyd_iteration
 from spark_clustering_spark.operators.clustering import points_df
 
@@ -55,7 +54,7 @@ def replay_points_dir(
     harness.py events pattern, applied to embeddings)."""
     from spark_clustering_spark.streaming.harness import write_replay_chunks
 
-    out = tempfile.mkdtemp(prefix="stream_kmeans_")
+    out = scratch("stream_kmeans_replay")
     pts = points_df(spark, sf_dir).persist()
     write_replay_chunks(pts, "vec_id", out, n_chunks)
     pts.unpersist()
@@ -83,44 +82,38 @@ def fit_kmeans_stream(
     pyspark.mllib.clustering.StreamingKMeansModel.update in
     tests/test_streaming.py."""
     replay = replay_points_dir(spark, sf_dir, n_chunks=n_chunks)
-    ckpt = tempfile.mkdtemp(prefix="stream_kmeans_ck_")
-    try:
-        init = (
-            points_df(spark, sf_dir).orderBy("vec_id").limit(k).collect()
-        )
-        centers = np.array([list(r["vec"]) for r in init], dtype=np.float64)
-        weights = np.zeros(k, dtype=np.float64)
-        state = {"batches": 0}
+    ckpt = scratch("stream_kmeans_ck")
+    init = points_df(spark, sf_dir).orderBy("vec_id").limit(k).collect()
+    centers = np.array([list(r["vec"]) for r in init], dtype=np.float64)
+    weights = np.zeros(k, dtype=np.float64)
+    state = {"batches": 0}
 
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            stats = lloyd_iteration(batch_df.select("vec_id", "vec"), centers)
-            # MLlib StreamingKMeans semantics: the per-batch discount
-            # applies to EVERY cluster, including ones this batch sends
-            # no points to (their mass decays, centers stay put)
-            np.multiply(weights, decay, out=weights)
-            for row in stats:
-                c = row["cluster_id"]
-                nb = float(row["n_points"])
-                sb = np.array(row["mean"], dtype=np.float64) * nb
-                centers[c] = (centers[c] * weights[c] + sb) / (weights[c] + nb)
-                weights[c] += nb
-            state["batches"] += 1
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        stats = lloyd_iteration(batch_df.select("vec_id", "vec"), centers)
+        # MLlib StreamingKMeans semantics: the per-batch discount
+        # applies to EVERY cluster, including ones this batch sends
+        # no points to (their mass decays, centers stay put)
+        np.multiply(weights, decay, out=weights)
+        for row in stats:
+            c = row["cluster_id"]
+            nb = float(row["n_points"])
+            sb = np.array(row["mean"], dtype=np.float64) * nb
+            centers[c] = (centers[c] * weights[c] + sb) / (weights[c] + nb)
+            weights[c] += nb
+        state["batches"] += 1
 
-        q = (
-            spark.readStream.schema("vec_id BIGINT, vec ARRAY<DOUBLE>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(replay, "chunk_*"))
-            .writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        rows = [
-            (int(c), float(weights[c]), int(state["batches"]), centers[c].tolist())
-            for c in range(k)
-        ]
-        return spark.createDataFrame(rows, STREAM_KMEANS_SCHEMA)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    q = (
+        spark.readStream.schema("vec_id BIGINT, vec ARRAY<DOUBLE>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(replay, "chunk_*"))
+        .writeStream.foreachBatch(handle)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.awaitTermination()
+    rows = [
+        (int(c), float(weights[c]), int(state["batches"]), centers[c].tolist())
+        for c in range(k)
+    ]
+    return spark.createDataFrame(rows, STREAM_KMEANS_SCHEMA)

@@ -74,7 +74,7 @@ def run_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = replay_dir(spark, sf_dir, n_chunks=2)
     src = _read_stream(stream_session(spark), replay)
     out = user_engagement_stream(src.select("user_id", "ts", "value"))
-    res = _run_to_completion(out, "update", f"engage_{id(src)}")
+    res = _run_to_completion(out, "update", "stream_engagement")
     # update mode emits one row per user per batch: keep the final state
     from pyspark.sql.window import Window
 

@@ -646,6 +646,58 @@ class TestSpread:
         assert self._width_under(spark, 32, 3_200, 100) == 32
         assert self._width_under(spark, None, 10_001, 100) == 101
 
+    def test_scratch_gives_an_empty_dir_per_name(self, spark):
+        """The same name twice gives an empty dir (the first call's
+        files are gone), under the SparkFiles root; two names coexist."""
+        import os
+
+        from pyspark import SparkFiles
+
+        from spark_clustering_spark.io import scratch
+
+        a = scratch("scratch_probe_a")
+        open(os.path.join(a, "part-0"), "w").close()
+        b = scratch("scratch_probe_b")
+        open(os.path.join(b, "part-0"), "w").close()
+        assert scratch("scratch_probe_a") == a
+        assert os.listdir(a) == []
+        assert os.listdir(b) == ["part-0"]
+        root = os.path.realpath(SparkFiles.getRootDirectory())
+        assert os.path.realpath(a).startswith(root + os.sep)
+
+    def test_repeated_file_writing_calls_leave_no_new_dirs(self, spark):
+        """A second round of the file-writing keys adds no entry to the
+        temp dir (bar Spark's own memory-sink checkpoints) and leaves
+        the scratch root holding the same names; a held sink frame
+        still reads after another key has written its files."""
+        import os
+        import tempfile
+
+        from pyspark import SparkFiles
+
+        import __spark_entry__ as e
+
+        qs = e.queries()
+        keys = (
+            "q_sink_metrics", "q_sink_partitioned", "q_sink_compact",
+            "q_scan_dpp", "q_stream_upsert", "q_stream_stateful",
+        )
+        root = os.path.join(SparkFiles.getRootDirectory(), "engine-scratch")
+        tmp = tempfile.gettempdir()
+        names, entries = [], []
+        for _ in range(2):
+            for key in keys:
+                qs[key](spark, SF_SMALL).collect()
+            names.append(sorted(os.listdir(root)))
+            entries.append(set(os.listdir(tmp)))
+        added = entries[1] - entries[0]
+        assert not {n for n in added if not n.startswith("temporary-")}
+        assert names[0] == names[1]
+
+        metrics = qs["q_sink_metrics"](spark, SF_SMALL)
+        qs["q_sink_partitioned"](spark, SF_SMALL).collect()
+        assert sorted(r["iter"] for r in metrics.collect()) == list(range(5))
+
 
 class TestRound4bOps:
     """Invariants for the SemDeDup / MV / DSIR / Gopher / CCNet /

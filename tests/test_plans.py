@@ -354,15 +354,12 @@ def test_anomaly_preaggregates_before_window(spark, qs):
     assert win < agg_below_window < scan, tree
 
 
-def test_zorder_layout_prunes_box_queries(spark, qs):
+def test_zorder_layout_prunes_box_queries(spark, qs, tmp_path):
     """A 2-D box predicate on a z-bucket-partitioned lake must prune to
     only the buckets whose z-range intersects the box (PartitionFilters
     in the plan, subset of buckets listed) while returning exactly the
     direct box-filter answer — the 2-D-pruning-from-1-D-layout property
     that motivates Z-ordering."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from spark_clustering_spark.io import table
@@ -378,7 +375,7 @@ def test_zorder_layout_prunes_box_queries(spark, qs):
         "l_orderkey", "l_linenumber", x.alias("x"), y.alias("y"),
         F.shiftright(zorder_value(x, y), ZORDER_BUCKET_SHIFT).alias("zbucket"),
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="zorder_lake_"), "lineitem")
+    out = str(tmp_path / "lineitem")
     keyed.write.mode("overwrite").partitionBy("zbucket").parquet(out)
     lake = spark.read.parquet(out)
     n_buckets = lake.select("zbucket").distinct().count()

@@ -399,15 +399,17 @@ def test_stream_enrich_matches_batch_two_chunkings(spark):
 
 def test_drain_timeout_stops_query_before_source_cleanup(spark):
     """Slow-drain guard (VERDICT r7 task 6): when a drain exceeds its
-    timeout, _drain must STOP the query before the caller rmtree's the
-    replay dir — deleting a live FileStreamSource's input turns a
-    benign timeout into a stream failure. Exercise the timeout path
-    for real: a file stream on a processingTime trigger never
-    self-terminates, so a 1-second _drain must return False, leave the
-    query inactive, and make the subsequent source-dir deletion safe
-    (no stream error surfaces afterwards)."""
-    import shutil
+    timeout, _drain must STOP the query before its replay dir can go —
+    the next scratch() of the replay's name deletes it, and deleting a
+    live FileStreamSource's input turns a benign timeout into a stream
+    failure. Exercise the timeout path for real: a file stream on a
+    processingTime trigger never self-terminates, so a 1-second _drain
+    must return False, leave the query inactive, and make the
+    subsequent source-dir deletion safe (no stream error surfaces
+    afterwards)."""
+    import os
 
+    from spark_clustering_spark.io import scratch
     from spark_clustering_spark.streaming.harness import (
         _drain,
         _read_stream,
@@ -426,9 +428,27 @@ def test_drain_timeout_stops_query_before_source_cleanup(spark):
     try:
         terminated = _drain(q, timeout=1)
         assert terminated is False  # the timeout path actually ran
-        assert not q.isActive  # stopped BEFORE the caller's rmtree
+        assert not q.isActive  # stopped BEFORE the dir is deleted
         assert q.exception() is None  # a guard that errors is no guard
     finally:
         if q.isActive:
             q.stop()
-        shutil.rmtree(replay, ignore_errors=True)
+        scratch(os.path.basename(replay))  # what the next replay does
+
+
+def test_stream_rerun_replaces_its_memory_sink_view(spark):
+    """A memory sink is named by its call site, so a second run of the
+    same stream replaces its temp view instead of adding one, while the
+    frame the first run returned still reads its own sink's rows."""
+    from spark_clustering_spark.streaming.harness import stream_dedup
+
+    def n_views() -> int:
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    first = stream_dedup(spark, SF_SMALL)
+    rows = sorted(first.collect())
+    n = n_views()
+    second = stream_dedup(spark, SF_SMALL, watermark="365 days")
+    assert n_views() == n
+    assert sorted(first.collect()) == rows
+    assert sorted(second.collect()) != rows
