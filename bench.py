@@ -16,9 +16,9 @@ round, not as one-off parity observations):
   python bench.py --sf /root/repo/testdata_sf1 --top 40 \
       --detail BENCH_r07_sf1.json
 benches the N heaviest declared keys (ranked by the committed sf0.1
-BENCH_DETAIL.json) plus every fit_* surface, same min-of-2/escalate-
-on-2x-spread protocol and canary. The driver's no-arg invocation is
-unchanged.
+BENCH_DETAIL.json) plus every fit_* surface, same min-of-2 protocol
+(escalating on a 2x slower second sample) and canary. The driver's
+no-arg invocation is unchanged.
 
 Each query executes fully via the no-op sink (measures scan + compute +
 shuffle, excludes driver-side result transfer). Timing starts after one
@@ -161,14 +161,17 @@ def main() -> None:
         _warm_kernel, "id bigint"
     ).write.format("noop").mode("overwrite").save()
 
-    # min of 2 executions per query, escalating to 3 when the two
-    # samples disagree by more than 2x: this host shows episodic
+    # min of 2 executions per query, escalating to 3 when the SECOND
+    # sample is more than 2x the first: this host shows episodic
     # multi-second steal bursts, and when BOTH of two samples land in a
     # burst the min still misreports a query 3-5x (documented in
     # PERF.md — q_join_anti "benched" 3.1 s vs 0.2 s steady state). A
-    # >2x spread between samples is the burst signature, so only then
-    # is a third sample worth its cost. The min is the steady-state
-    # number — the one that actually scales to cluster sizing.
+    # slow second sample is the one case where the min can be an
+    # inflated first sample, so only then is a third sample worth its
+    # cost; a slow FIRST sample is usually a one-time build or
+    # first-use cost, and the min already keeps the warm second one.
+    # The min is the steady-state number — the one that actually
+    # scales to cluster sizing.
     # The two samples are INTERLEAVED ACROSS FULL PASSES over the key
     # list (pass 2 rotated by half), not run back-to-back: a steal
     # burst lasts seconds while a pass lasts minutes, so correlated
@@ -218,12 +221,12 @@ def main() -> None:
             if name not in errored:
                 _run_once(name)
         canary_runs.append(_canary())
-    # escalation pass: a >2x spread between the two (pass-separated)
-    # samples is the burst signature — only then buy a third
+    # escalation pass: a second sample more than 2x the first is the
+    # burst signature — only then buy a third
     for name in names:
         runs = runs_by_key[name]
-        if name not in errored and len(runs) == 2 and max(runs) > 2 * max(
-            min(runs), 0.05
+        if name not in errored and len(runs) == 2 and runs[1] > 2 * max(
+            runs[0], 0.05
         ):
             _run_once(name)
     # end-of-run retry for errored keys: one fresh attempt after the

@@ -12,7 +12,8 @@ chromosomes with the dataset broadcast (gka.java:303,313); here the
   the only structure proportional to data size;
 - per-member centers / objectives / mutated genes: tiny (≤ P·k·d),
   crossing the driver each generation as collected literals (which also
-  truncates lineage; labels additionally localCheckpoint per gen).
+  truncates lineage; each generation's reassignment is persisted and
+  released when the next one replaces it).
 
 One generation = KMO (two shuffles: center means keyed on
 (member,label,dim); reassignment argmin via broadcast of the P·k·d
@@ -208,162 +209,164 @@ def fit_gka(
     # upstream pipeline is computed ONCE; the repartition then reads
     # the cache, and the pre-shuffle blocks are released right after.
     src = points.persist()
-    n_rows = src.count()
-    par = points.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(par, (n_rows + 19_999) // 20_000))
-    points = src.repartition(parts, "vec_id").persist()
-    points.count()
-    src.unpersist()
+    points, prev_mixed = src, None
+    try:
+        n_rows = src.count()
+        par = points.sparkSession.sparkContext.defaultParallelism
+        parts = max(1, min(par, (n_rows + 19_999) // 20_000))
+        points = src.repartition(parts, "vec_id").persist()
+        points.count()
+        src.unpersist()
 
-    labels = _init_labels(spark, points, pop, k, seed)
-    best = float("inf")
-    best_member = -1
-    metrics_rows: list[tuple] = []
-    history: list[dict] = []
+        labels = _init_labels(spark, points, pop, k, seed)
+        best = float("inf")
+        best_member = -1
+        metrics_rows: list[tuple] = []
+        history: list[dict] = []
 
-    # gen-0 centers need one dedicated shuffle+kernel job (the initial
-    # labels exist only as a DF); every later generation's centers are
-    # derived DRIVER-SIDE from the partial sums the reassign kernel
-    # emits for free — see the sums bookkeeping at the loop tail
-    centers_map = gka_member_centers(labels, points)
+        # gen-0 centers need one dedicated shuffle+kernel job (the initial
+        # labels exist only as a DF); every later generation's centers are
+        # derived DRIVER-SIDE from the partial sums the reassign kernel
+        # emits for free — see the sums bookkeeping at the loop tail
+        centers_map = gka_member_centers(labels, points)
 
-    prev_mixed = None
-    for gen in range(num_gen):
-        t0 = time.time()
-        # the mutation draws depend only on (member, gen, seed), so the
-        # target labels are known BEFORE reassignment — the kernel emits
-        # each point's distance to its member's target center (mdist)
-        # and the fit loop needs no separate gene-vector lookup job
-        u1 = {m: py_lcg_uniform(m * 7919 + gen, seed + 1) for m in range(pop)}
-        mutating = [m for m in range(pop) if u1[m] < pm]
-        u2 = {m: py_lcg_uniform(m * 104729 + gen, seed + 2) for m in mutating}
-        u3 = {m: py_lcg_uniform(m * 1299709 + gen, seed + 3) for m in mutating}
-        targets = {m: int(u3[m] * k) for m in mutating}
-        # persist (lazy) instead of an eager checkpoint: the downstream
-        # jobs this generation reuse the materialization the first one
-        # triggers, without paying a dedicated write job
-        mixed = gka_reassign(
-            points, centers_map, targets, emit_partials=True
-        ).persist()
+        for gen in range(num_gen):
+            t0 = time.time()
+            # the mutation draws depend only on (member, gen, seed), so the
+            # target labels are known BEFORE reassignment — the kernel emits
+            # each point's distance to its member's target center (mdist)
+            # and the fit loop needs no separate gene-vector lookup job
+            u1 = {m: py_lcg_uniform(m * 7919 + gen, seed + 1) for m in range(pop)}
+            mutating = [m for m in range(pop) if u1[m] < pm]
+            u2 = {m: py_lcg_uniform(m * 104729 + gen, seed + 2) for m in mutating}
+            u3 = {m: py_lcg_uniform(m * 1299709 + gen, seed + 3) for m in mutating}
+            targets = {m: int(u3[m] * k) for m in mutating}
+            # persist (lazy) instead of an eager checkpoint: the downstream
+            # jobs this generation reuse the materialization the first one
+            # triggers, without paying a dedicated write job
+            mixed = gka_reassign(
+                points, centers_map, targets, emit_partials=True
+            ).persist()
+            if prev_mixed is not None:
+                prev_mixed.unpersist()
+            prev_mixed = mixed
+            assigned = mixed.filter(F.col("kind") == 0).select(
+                "member_id", "vec_id", "label", "dist", "mdist"
+            )
+            partials = mixed.filter(F.col("kind") == 1).select(
+                "member_id", "label", "n_points", "sum_vec"
+            )
+
+            # ---- fused fitness + pick + center partials: ONE job ---------
+            objs, genes, sums = _gen_stats_and_picks(
+                assigned, mutating, u2, cm, partials
+            )
+
+            # tiny lookup job for the ≤P mutated gene vectors (pruned scan
+            # of the cached points) — needed to patch the center sums
+            gene_vecs: dict[int, list] = {}
+            if genes:
+                vids = [int(g["vec_id"]) for g in genes]
+                gene_vecs = {
+                    int(r["vec_id"]): list(r["vec"])
+                    for r in points.filter(F.col("vec_id").isin(vids)).collect()
+                }
+
+            patches: list[tuple[int, int, int, float]] = []
+            for g in genes:
+                m = g["member_id"]
+                new_label = targets[m]
+                md = g["mdist"]
+                # Q9 guard: NaN mdist = target label has no center → keep
+                # the old distance (reference keeps the old contribution)
+                new_dist = g["dist"] if md is None or math.isnan(md) else md
+                patches.append((int(m), int(g["vec_id"]), new_label, float(new_dist)))
+                # patch the objective arithmetically (Q7: new distance is
+                # against the pre-mutation centroid) — no re-aggregation
+                objs[m] = objs[m] - g["dist"] + new_dist
+                # patch the center sums the same way: membership sums are
+                # linear, so moving one point is two O(d) updates
+                v = np.array(gene_vecs[int(g["vec_id"])], dtype=np.float64)
+                old_key = (int(m), int(g["label"]))
+                n_old, s_old = sums[old_key]
+                if n_old <= 1:
+                    del sums[old_key]
+                else:
+                    sums[old_key] = [n_old - 1, s_old - v]
+                new_key = (int(m), int(new_label))
+                e = sums.get(new_key)
+                if e is None:
+                    sums[new_key] = [1, v.copy()]
+                else:
+                    sums[new_key] = [e[0] + 1, e[1] + v]
+            if patches:
+                pdf = spark.createDataFrame(
+                    patches, "p_m INT, p_v BIGINT, new_label INT, new_dist DOUBLE"
+                )
+                assigned = (
+                    assigned.join(
+                        F.broadcast(pdf),
+                        (F.col("member_id") == F.col("p_m"))
+                        & (F.col("vec_id") == F.col("p_v")),
+                        "left",
+                    )
+                    .select(
+                        "member_id",
+                        "vec_id",
+                        F.coalesce("new_label", "label").alias("label"),
+                        F.coalesce("new_dist", "dist").alias("dist"),
+                    )
+                )
+
+            prev_best = best
+            gen_best_m = min(objs, key=lambda m: (objs[m], m))
+            if objs[gen_best_m] < best:
+                best, best_member = objs[gen_best_m], gen_best_m
+            metrics_rows.append((gen, round(best, 4), int((time.time() - t0) * 1000)))
+            history.append({"gen": gen, "objs": objs, "best": best})
+            if tol > 0 and gen > 0 and prev_best - best < tol:
+                break  # converged: best improved by less than tol
+
+            # ---- selection (R10, driver-side per Q8) ----------------------
+            fits = [(m, 1.0 / objs[m]) for m in sorted(objs)]
+            total = sum(f for _, f in fits)
+            cdf, acc = [], 0.0
+            for m, f in fits:
+                acc += f / total
+                cdf.append((m, acc))
+            chosen = []
+            for slot in range(pop):
+                u = py_lcg_uniform(slot * 15485863 + gen, seed + 4)
+                chosen.append(next((m for m, hi in cdf if u <= hi), cdf[-1][0]))
+            remap = spark.createDataFrame(
+                [(int(old), int(new)) for new, old in enumerate(chosen)],
+                "old_member INT, member_id INT",
+            )
+            labels = (
+                assigned.select(F.col("member_id").alias("old_member"), "vec_id", "label")
+                .join(F.broadcast(remap), "old_member")
+                .select("member_id", "vec_id", "label")
+            )
+            # next generation's KMO centers, derived arithmetically: the
+            # selection remap copies the chosen member's patched sums into
+            # each slot (sums are linear in membership — no re-aggregation
+            # job; a label with zero members has no entry, preserving Q9)
+            centers_map = {
+                slot: {
+                    lab: (s / n).tolist()
+                    for (m, lab), (n, s) in sums.items()
+                    if m == old
+                }
+                for slot, old in enumerate(chosen)
+            }
+    finally:
+        # release cached blocks (ADVICE: long sessions run many fits); the
+        # returned labels DF stays valid — it recomputes from parquet +
+        # broadcast centers if consumed after this point
+        src.unpersist()
+        points.unpersist()
         if prev_mixed is not None:
             prev_mixed.unpersist()
-        prev_mixed = mixed
-        assigned = mixed.filter(F.col("kind") == 0).select(
-            "member_id", "vec_id", "label", "dist", "mdist"
-        )
-        partials = mixed.filter(F.col("kind") == 1).select(
-            "member_id", "label", "n_points", "sum_vec"
-        )
-
-        # ---- fused fitness + pick + center partials: ONE job ---------
-        objs, genes, sums = _gen_stats_and_picks(
-            assigned, mutating, u2, cm, partials
-        )
-
-        # tiny lookup job for the ≤P mutated gene vectors (pruned scan
-        # of the cached points) — needed to patch the center sums
-        gene_vecs: dict[int, list] = {}
-        if genes:
-            vids = [int(g["vec_id"]) for g in genes]
-            gene_vecs = {
-                int(r["vec_id"]): list(r["vec"])
-                for r in points.filter(F.col("vec_id").isin(vids)).collect()
-            }
-
-        patches: list[tuple[int, int, int, float]] = []
-        for g in genes:
-            m = g["member_id"]
-            new_label = targets[m]
-            md = g["mdist"]
-            # Q9 guard: NaN mdist = target label has no center → keep
-            # the old distance (reference keeps the old contribution)
-            new_dist = g["dist"] if md is None or math.isnan(md) else md
-            patches.append((int(m), int(g["vec_id"]), new_label, float(new_dist)))
-            # patch the objective arithmetically (Q7: new distance is
-            # against the pre-mutation centroid) — no re-aggregation
-            objs[m] = objs[m] - g["dist"] + new_dist
-            # patch the center sums the same way: membership sums are
-            # linear, so moving one point is two O(d) updates
-            v = np.array(gene_vecs[int(g["vec_id"])], dtype=np.float64)
-            old_key = (int(m), int(g["label"]))
-            n_old, s_old = sums[old_key]
-            if n_old <= 1:
-                del sums[old_key]
-            else:
-                sums[old_key] = [n_old - 1, s_old - v]
-            new_key = (int(m), int(new_label))
-            e = sums.get(new_key)
-            if e is None:
-                sums[new_key] = [1, v.copy()]
-            else:
-                sums[new_key] = [e[0] + 1, e[1] + v]
-        if patches:
-            pdf = spark.createDataFrame(
-                patches, "p_m INT, p_v BIGINT, new_label INT, new_dist DOUBLE"
-            )
-            assigned = (
-                assigned.join(
-                    F.broadcast(pdf),
-                    (F.col("member_id") == F.col("p_m"))
-                    & (F.col("vec_id") == F.col("p_v")),
-                    "left",
-                )
-                .select(
-                    "member_id",
-                    "vec_id",
-                    F.coalesce("new_label", "label").alias("label"),
-                    F.coalesce("new_dist", "dist").alias("dist"),
-                )
-            )
-
-        prev_best = best
-        gen_best_m = min(objs, key=lambda m: (objs[m], m))
-        if objs[gen_best_m] < best:
-            best, best_member = objs[gen_best_m], gen_best_m
-        metrics_rows.append((gen, round(best, 4), int((time.time() - t0) * 1000)))
-        history.append({"gen": gen, "objs": objs, "best": best})
-        if tol > 0 and gen > 0 and prev_best - best < tol:
-            break  # converged: best improved by less than tol
-
-        # ---- selection (R10, driver-side per Q8) ----------------------
-        fits = [(m, 1.0 / objs[m]) for m in sorted(objs)]
-        total = sum(f for _, f in fits)
-        cdf, acc = [], 0.0
-        for m, f in fits:
-            acc += f / total
-            cdf.append((m, acc))
-        chosen = []
-        for slot in range(pop):
-            u = py_lcg_uniform(slot * 15485863 + gen, seed + 4)
-            chosen.append(next((m for m, hi in cdf if u <= hi), cdf[-1][0]))
-        remap = spark.createDataFrame(
-            [(int(old), int(new)) for new, old in enumerate(chosen)],
-            "old_member INT, member_id INT",
-        )
-        labels = (
-            assigned.select(F.col("member_id").alias("old_member"), "vec_id", "label")
-            .join(F.broadcast(remap), "old_member")
-            .select("member_id", "vec_id", "label")
-        )
-        # next generation's KMO centers, derived arithmetically: the
-        # selection remap copies the chosen member's patched sums into
-        # each slot (sums are linear in membership — no re-aggregation
-        # job; a label with zero members has no entry, preserving Q9)
-        centers_map = {
-            slot: {
-                lab: (s / n).tolist()
-                for (m, lab), (n, s) in sums.items()
-                if m == old
-            }
-            for slot, old in enumerate(chosen)
-        }
-
-    # release cached blocks (ADVICE: long sessions run many fits); the
-    # returned labels DF stays valid — it recomputes from parquet +
-    # broadcast centers if consumed after this point
-    points.unpersist()
-    if prev_mixed is not None:
-        prev_mixed.unpersist()
     metrics = spark.createDataFrame(metrics_rows, GKA_METRICS_SCHEMA)
     return GKAResult(
         best_member=best_member,

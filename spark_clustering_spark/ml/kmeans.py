@@ -89,123 +89,127 @@ def fit_kmeans(
         raise ValueError(f"num_run must be >= 1, got {num_run}")
 
     points = points.persist()
-    points.count()  # materialize once; every iteration reuses the cache
+    try:
+        points.count()  # materialize once; every iteration reuses the cache
 
-    import numpy as np
+        import numpy as np
 
-    # ---- lockstep multi-restart (R21): every iteration evaluates ALL
-    # still-active runs in ONE kernel pass (ml/kernels.py
-    # lloyd_iteration_multi) — per-run math is independent, so results
-    # are identical to sequential restarts with 1/num_run of the jobs.
-    run_centers: dict[int, list] = {
-        run: [
-            [i, vec]
-            for i, (_, vec) in enumerate(_init_centroids(points, k, seed, run))
-        ]
-        for run in range(num_run)
-    }
-    active = set(run_centers)
-    prev_objs: dict[int, float] = {}
-    # per-(run, iter): objective, squared objective, empties, ms,
-    # pre-update centers — best-tracking is post-processed in the
-    # sequential (run-major) order the reference uses
-    cell: dict[tuple[int, int], dict] = {}
-
-    for it in range(num_iter):
-        if not active:
-            break
-        t0 = time.time()
-        stacks = {
-            run: np.array([vec for _, vec in run_centers[run]], dtype=np.float64)
-            for run in sorted(active)
-        }
-        stats_by_run = lloyd_iteration_multi(points, stacks)
-        iter_ms = int((time.time() - t0) * 1000)
-        all_empty: dict[int, list[int]] = {}
-        for run in sorted(active):
-            got = {s["cluster_id"]: s for s in stats_by_run[run]}
-            all_empty[run] = [
-                cid for cid, _ in enumerate(run_centers[run]) if cid not in got
+        # ---- lockstep multi-restart (R21): every iteration evaluates ALL
+        # still-active runs in ONE kernel pass (ml/kernels.py
+        # lloyd_iteration_multi) — per-run math is independent, so results
+        # are identical to sequential restarts with 1/num_run of the jobs.
+        run_centers: dict[int, list] = {
+            run: [
+                [i, vec]
+                for i, (_, vec) in enumerate(_init_centroids(points, k, seed, run))
             ]
-        # Q1: correct empty-cluster reseed — absent cids get fresh
-        # deterministic points (one small draw shared per iteration)
-        n_needed = max((len(v) for v in all_empty.values()), default=0)
-        fresh_rows = (
-            points.withColumn("u", lcg_uniform("vec_id", (seed or 0) + 7000 + it))
-            .orderBy("u", "vec_id")
-            .limit(n_needed)
-            .collect()
-            if n_needed
-            else []
-        )
-        for run in sorted(active):
-            got = {s["cluster_id"]: s for s in stats_by_run[run]}
-            centers = run_centers[run]
-            obj = float(sum(s["sum_dist"] for s in stats_by_run[run]))  # Q4/Q7
-            obj_sq = float(sum(s["sum_sq"] for s in stats_by_run[run]))
-            reseed = {
-                cid: list(r["vec"])
-                for cid, r in zip(all_empty[run], fresh_rows)
-            }
-            new_centers = []
-            for cid, old_vec in centers:
-                if cid in got:
-                    new_centers.append([cid, list(got[cid]["mean"])])
-                elif cid in reseed:
-                    new_centers.append([cid, reseed[cid]])
-                else:  # Q9 guard: keep stale centroid rather than NaN
-                    new_centers.append([cid, old_vec])
-            cell[(run, it)] = {
-                "objective": obj,
-                "objective_sq": obj_sq,
-                "n_empty": len(all_empty[run]),
-                "iter_ms": iter_ms,
-                "pre_centers": [list(c) for c in centers],
-            }
-            run_centers[run] = new_centers
-            prev = prev_objs.get(run)
-            if prev is not None and tol > 0 and abs(prev - obj) < tol:
-                active.discard(run)
-            prev_objs[run] = obj
+            for run in range(num_run)
+        }
+        active = set(run_centers)
+        prev_objs: dict[int, float] = {}
+        # per-(run, iter): objective, squared objective, empties, ms,
+        # pre-update centers — best-tracking is post-processed in the
+        # sequential (run-major) order the reference uses
+        cell: dict[tuple[int, int], dict] = {}
 
-    # ---- best tracking (R7/R21) in the reference's run-major order
-    best_obj = float("inf")
-    best_centers: list | None = None
-    metrics_rows: list[tuple] = []
-    history: list[dict] = []
-    for run in range(num_run):
         for it in range(num_iter):
-            c = cell.get((run, it))
-            if c is None:
-                continue
-            if c["objective"] < best_obj:
-                # Q7: obj was measured against the PRE-update centers
-                best_obj, best_centers = c["objective"], c["pre_centers"]
-            metrics_rows.append(
-                (
-                    run,
-                    it,
-                    round(c["objective"], 4),
-                    round(c["objective_sq"], 4),
-                    round(best_obj, 4),
-                    c["n_empty"],
-                    c["iter_ms"],
-                )
+            if not active:
+                break
+            t0 = time.time()
+            stacks = {
+                run: np.array([vec for _, vec in run_centers[run]], dtype=np.float64)
+                for run in sorted(active)
+            }
+            stats_by_run = lloyd_iteration_multi(points, stacks)
+            iter_ms = int((time.time() - t0) * 1000)
+            all_empty: dict[int, list[int]] = {}
+            for run in sorted(active):
+                got = {s["cluster_id"]: s for s in stats_by_run[run]}
+                all_empty[run] = [
+                    cid for cid, _ in enumerate(run_centers[run]) if cid not in got
+                ]
+            # Q1: correct empty-cluster reseed — absent cids get fresh
+            # deterministic points (one small draw shared per iteration)
+            n_needed = max((len(v) for v in all_empty.values()), default=0)
+            fresh_rows = (
+                points.withColumn("u", lcg_uniform("vec_id", (seed or 0) + 7000 + it))
+                .orderBy("u", "vec_id")
+                .limit(n_needed)
+                .collect()
+                if n_needed
+                else []
             )
-            history.append(
-                {
-                    "run": run,
-                    "iter": it,
-                    "objective": c["objective"],
-                    "objective_sq": c["objective_sq"],
+            for run in sorted(active):
+                got = {s["cluster_id"]: s for s in stats_by_run[run]}
+                centers = run_centers[run]
+                obj = float(sum(s["sum_dist"] for s in stats_by_run[run]))  # Q4/Q7
+                obj_sq = float(sum(s["sum_sq"] for s in stats_by_run[run]))
+                reseed = {
+                    cid: list(r["vec"])
+                    for cid, r in zip(all_empty[run], fresh_rows)
                 }
-            )
+                new_centers = []
+                for cid, old_vec in centers:
+                    if cid in got:
+                        new_centers.append([cid, list(got[cid]["mean"])])
+                    elif cid in reseed:
+                        new_centers.append([cid, reseed[cid]])
+                    else:  # Q9 guard: keep stale centroid rather than NaN
+                        new_centers.append([cid, old_vec])
+                cell[(run, it)] = {
+                    "objective": obj,
+                    "objective_sq": obj_sq,
+                    "n_empty": len(all_empty[run]),
+                    "iter_ms": iter_ms,
+                    "pre_centers": [list(c) for c in centers],
+                }
+                run_centers[run] = new_centers
+                prev = prev_objs.get(run)
+                if prev is not None and tol > 0 and abs(prev - obj) < tol:
+                    active.discard(run)
+                prev_objs[run] = obj
 
-    final_cdf = _centroids_df(spark, best_centers)
-    assignments = assign(points, final_cdf).select("vec_id", "cluster_id", "dist")
-    # drop the cache (long sessions run many fits); assignments stays
-    # valid — it recomputes from the source if consumed later
-    points.unpersist()
+        # ---- best tracking (R7/R21) in the reference's run-major order
+        best_obj = float("inf")
+        best_centers: list | None = None
+        metrics_rows: list[tuple] = []
+        history: list[dict] = []
+        for run in range(num_run):
+            for it in range(num_iter):
+                c = cell.get((run, it))
+                if c is None:
+                    continue
+                if c["objective"] < best_obj:
+                    # Q7: obj was measured against the PRE-update centers
+                    best_obj, best_centers = c["objective"], c["pre_centers"]
+                metrics_rows.append(
+                    (
+                        run,
+                        it,
+                        round(c["objective"], 4),
+                        round(c["objective_sq"], 4),
+                        round(best_obj, 4),
+                        c["n_empty"],
+                        c["iter_ms"],
+                    )
+                )
+                history.append(
+                    {
+                        "run": run,
+                        "iter": it,
+                        "objective": c["objective"],
+                        "objective_sq": c["objective_sq"],
+                    }
+                )
+
+        final_cdf = _centroids_df(spark, best_centers)
+        assignments = assign(points, final_cdf).select(
+            "vec_id", "cluster_id", "dist"
+        )
+    finally:
+        # drop the cache (long sessions run many fits); assignments stays
+        # valid — it recomputes from the source if consumed later
+        points.unpersist()
     metrics = spark.createDataFrame(metrics_rows, METRICS_SCHEMA)
     return KMeansResult(
         centroids=[(cid, vec) for cid, vec in best_centers],

@@ -25,7 +25,7 @@ from spark_clustering_spark.functions.detagg import (
     sql_dround,
     sql_dsum,
 )
-from spark_clustering_spark.io import register_temp_views, table
+from spark_clustering_spark.io import pin, register_temp_views, table
 from spark_clustering_spark.registry import query
 
 
@@ -929,7 +929,7 @@ def q_agg_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_clustering_spark.functions.porthash import md5_int32
 
     e = table(spark, sf_dir, "events")
-    du = e.select("event_type", "user_id").distinct().localCheckpoint(eager=True)
+    du = pin(e.select("event_type", "user_id").distinct())
     hv = du.select(
         "event_type",
         "user_id",
@@ -938,12 +938,12 @@ def q_agg_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h"),
     )
     wr = Window.partitionBy("event_type").orderBy("h", "user_id")
-    s = (
+    # sketch rows: |types| * k, tiny
+    s = pin(
         hv.withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") <= KMV_K)
         .select("event_type", "h")
         .distinct()
-        .localCheckpoint(eager=True)  # sketch rows: |types| * k, tiny
     )
     types = du.select("event_type").distinct()
     ta = types.select(F.col("event_type").alias("ta"))
@@ -1602,13 +1602,12 @@ def q_agg_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy."""
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
-    cells = (
+    # r x c rows (~25): pin them so the marginals, total, and the
+    # terms join replan from the tiny table, not 6 fact passes
+    cells = pin(
         c.join(o, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("prio"))
         .agg(F.count(F.lit(1)).alias("n"))
-        # r x c rows (~25): pin them so the marginals, total, and the
-        # terms join replan from the tiny table, not 6 fact passes
-        .localCheckpoint(eager=True)
     )
     rows_ = cells.groupBy("seg").agg(F.sum("n").alias("rn"))
     cols_ = cells.groupBy("prio").agg(F.sum("n").alias("cn"))
@@ -1674,27 +1673,29 @@ def q_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE partial+final aggregate computes every metric
     (count-distinct expands via Spark's expand-operator but stays a
     single shuffle of (col-id, value) partials); the 4-row unpivot is
-    driver-free projection of the one-row summary, pinned by an eager
-    checkpoint so the fact scan runs once, not four times."""
+    driver-free projection of the one-row summary, pinned (io.pin) so
+    the fact scan runs once, not four times."""
     d = table(spark, sf_dir, "documents")
     nch_s = F.col("n_chars").cast("string")
-    s = d.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("lang").isNull(), 1)).alias("null_lang"),
-        F.count(F.when(F.col("source").isNull(), 1)).alias("null_source"),
-        F.count(F.when(F.col("text").isNull(), 1)).alias("null_text"),
-        F.count(F.when(F.col("n_chars").isNull(), 1)).alias("null_nchars"),
-        F.countDistinct("lang").alias("d_lang"),
-        F.countDistinct("source").alias("d_source"),
-        F.countDistinct("text").alias("d_text"),
-        F.countDistinct("n_chars").alias("d_nchars"),
-        F.min("lang").alias("min_lang"),
-        F.max("lang").alias("max_lang"),
-        F.min("source").alias("min_source"),
-        F.max("source").alias("max_source"),
-        F.min(nch_s).alias("min_nchars"),
-        F.max(nch_s).alias("max_nchars"),
-    ).localCheckpoint(eager=True)
+    s = pin(
+        d.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.when(F.col("lang").isNull(), 1)).alias("null_lang"),
+            F.count(F.when(F.col("source").isNull(), 1)).alias("null_source"),
+            F.count(F.when(F.col("text").isNull(), 1)).alias("null_text"),
+            F.count(F.when(F.col("n_chars").isNull(), 1)).alias("null_nchars"),
+            F.countDistinct("lang").alias("d_lang"),
+            F.countDistinct("source").alias("d_source"),
+            F.countDistinct("text").alias("d_text"),
+            F.countDistinct("n_chars").alias("d_nchars"),
+            F.min("lang").alias("min_lang"),
+            F.max("lang").alias("max_lang"),
+            F.min("source").alias("min_source"),
+            F.max("source").alias("max_source"),
+            F.min(nch_s).alias("min_nchars"),
+            F.max(nch_s).alias("max_nchars"),
+        )
+    )
     rows = [
         ("lang", "null_lang", "d_lang", "min_lang", "max_lang"),
         ("source", "null_source", "d_source", "min_source", "max_source"),

@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 from spark_clustering_spark.functions.detagg import DEC, dround, dsum, sql_dround, sql_dsum
 from spark_clustering_spark.functions.distance import as_double_array, euclidean
 from spark_clustering_spark.functions.rng import lcg_uniform, sql_lcg_uniform
-from spark_clustering_spark.io import spread, table
+from spark_clustering_spark.io import pin, spread, table
 from spark_clustering_spark.registry import query
 
 K_DEFAULT = 8
@@ -234,11 +234,7 @@ def q_sse_objective(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled Lloyd iterations from deterministic init — the
     composition check for assign→update→assign→update (R4+R5+R11)."""
-    # localCheckpoint (not persist): reused by both assign passes inside
-    # the query. Nothing unpersists it: the blocks stay until a driver
-    # GC lets the ContextCleaner drop the RDD, which a busy session may
-    # not reach for many queries.
-    pts = points_df(spark, sf_dir).localCheckpoint(eager=False)
+    pts = pin(points_df(spark, sf_dir))  # read by both assign passes
     c0 = centroids_df(spark, sf_dir)
     c1 = update_centroids(assign(pts, c0)).select("cid", "cvec")
     u2 = update_centroids(assign(pts, c1))
@@ -2246,11 +2242,11 @@ def q_ml_vmeasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = assign(pts, centroids_df(spark, sf_dir, K_DEFAULT)).select(
         "vec_id", "cluster_id"
     )
-    cont = (
+    # tiny k x labels table, 4 readers
+    cont = pin(
         a.join(labels, "vec_id")
         .groupBy(F.col("cluster_id").alias("ci"), F.col("label").alias("lj"))
         .agg(F.count(F.lit(1)).alias("nij"))
-        .localCheckpoint(eager=True)  # tiny k x labels table, 4 readers
     )
     tot = cont.agg(F.sum("nij").alias("n"))
     ai = cont.groupBy("ci").agg(F.sum("nij").alias("a"))

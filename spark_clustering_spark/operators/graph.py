@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_clustering_spark.functions.detagg import dround, sql_dround
-from spark_clustering_spark.io import artifact, shuffle_width, table
+from spark_clustering_spark.io import artifact, pin, shuffle_width, table
 from spark_clustering_spark.registry import query
 
 PR_DAMPING = 0.85
@@ -76,11 +76,11 @@ def basket_edges(spark: SparkSession, sf_dir: str, cap: int | None = None):
     order contains both; ``cap`` keeps only baskets with ≤cap distinct
     parts (the focused-basket rule of q_graph_jaccard_linkpred) or None
     for the full graph. Built once per (application, sf_dir, cap) into
-    the session-artifact store (io.artifact) as a localCheckpoint: eight
-    graph operators share the exact same fact-sized edge build, so every
-    consumer starts from the pinned shuffle output instead of
-    re-scanning lineitem, and the pin is dropped with the rest of its
-    scope when another sf_dir's artifact is stored."""
+    the session-artifact store (io.artifact) as a pinned frame (io.pin):
+    eight graph operators share the exact same fact-sized edge build,
+    so every consumer reads the pinned shuffle output instead of
+    re-scanning lineitem, and the pin is unpersisted with the
+    rest of its scope when another sf_dir's artifact is stored."""
     return artifact(
         spark, sf_dir, ("edges", cap), lambda: _build_edges(spark, sf_dir, cap)
     )
@@ -111,11 +111,11 @@ def _build_edges(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     # per-task key cardinality stays bounded at ANY scale factor (and
     # AQE never coalesces a user-specified repartition). Below the
     # threshold (sf<=1) the partial aggregate fits comfortably and the
-    # extra exchange + eager materialization is pure tax — round-9's
-    # sf0.1 graph-family regression (modularity 0.52→1.17 s) — so the
-    # small path keeps the planner's own placement and a LAZY
-    # checkpoint (pinned on first use, still shared by all consumers).
-    # Same rows out either way — dedup placement is an execution detail.
+    # extra exchange is pure tax — round-9's sf0.1 graph-family
+    # regression (modularity 0.52→1.17 s, measured together with an
+    # eager materialization) — so the small path keeps the planner's
+    # own placement. Same rows out either way — dedup placement is an
+    # execution detail.
     # Threshold 10M (ADVICE r10): sf1 lineitem is ~6.0M rows and ran
     # green on the planner-placed path for rounds 6-8, so it belongs on
     # the small path; the 16 GB-pool blowup the heavy path cures was
@@ -124,26 +124,25 @@ def _build_edges(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     pairs = a.join(b, "o").filter(F.col("u") < F.col("v")).select("u", "v")
     if n_li >= 10_000_000:
         width = min(4096, shuffle_width(spark, n_li, 250_000))
-        return pairs.repartition(width, "u", "v").distinct().localCheckpoint(eager=True)
+        return pin(pairs.repartition(width, "u", "v").distinct())
     else:
-        # Small path: planner-placed dedup, LAZY checkpoint (pinned on
-        # first use, shared by all consumers). Its few-partition layout
+        # Small path: planner-placed dedup. Its few-partition layout
         # (AQE-coalesced) is DELIBERATELY kept: widening the shared
-        # checkpoint to the core count was measured to tax every cheap
+        # pin to the core count was measured to tax every cheap
         # consumer with 32-way task overhead (kcore 3.0→4.7 s,
         # assortativity 1.6→2.3 s at sf0.1); the wedge queries that DO
         # amplify work per edge spread their probe stream locally via
         # _wedge_spread() instead.
-        return pairs.distinct().localCheckpoint(eager=False)
+        return pin(pairs.distinct())
 
 
 def _wedge_spread(df: DataFrame) -> DataFrame:
     """Round-robin the wedge probe stream across the cluster before a
-    map-side (broadcast) wedge build. The shared edge checkpoint keeps
+    map-side (broadcast) wedge build. The shared edge pin keeps
     its small AQE-coalesced layout (cheap consumers pay no extra task
     overhead), but a fused wedge build amplifies each probe row into
     O(d) wedge rows — at sf0.1 a 25M+ row stream that otherwise runs
-    on the checkpoint's 4-10 partitions (VERDICT r11 item 1: jaccard's
+    on the pin's 4-10 partitions (VERDICT r11 item 1: jaccard's
     8-vs-32-core scaling ratio was 1.0 because every sf≤1 parquet is a
     single row group and all pre-aggregation exchanges were removed).
     Width = cluster parallelism — scale-adaptive, not a local[32]
@@ -247,7 +246,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # |nations|^2 edges at most -- pin them so the unrolled iterations
     # don't re-run the fact-sized join chain per step
-    e = e.localCheckpoint(eager=True)
+    e = pin(e)
     outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
     n_nodes = n.count()  # 25-row dimension; a driver scalar by design
     r = n.select(
@@ -365,14 +364,13 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    o = (
+    o = pin(  # read by the 3 join sides below
         e.join(F.broadcast(du), "u")
         .join(F.broadcast(dv), "v")
         .select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .localCheckpoint(eager=True)  # pin: 3 join sides below
     )
     n_edges_m = _edge_stats(spark, sf_dir, None)[0]  # stored beside the edges
     if _bcast_path_ok(spark, sf_dir, None):
@@ -483,7 +481,8 @@ def q_graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    e = (
+    # <=|nations|^2 rows, reused per hop
+    e = pin(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
@@ -492,7 +491,6 @@ def q_graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=True)  # <=|nations|^2 rows, reused per hop
     )
     # bounded BFS: best(src, dst) -> min hops, frontier joined on edges
     best = e.select("src", "dst", F.lit(1).alias("min_hops"))
@@ -767,11 +765,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         alive = deg.filter(F.col("d") >= KCORE_K).select("node")
-        e = (
+        e = pin(
             e.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
         row = alive.agg(F.count(F.lit(1)).alias("n_alive")).crossJoin(
             e.agg(F.count(F.lit(1)).alias("n_edges"))
@@ -1251,7 +1248,7 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-center wedge enumeration joined against the edge set on
     the (u,v) pair key — Σd² wedge rows hash-partitioned, never a
     single reducer; degrees and the wedge-closure probe reuse the
-    pinned edge checkpoint; the top-50 is TakeOrderedAndProject."""
+    pinned edge build; the top-50 is TakeOrderedAndProject."""
     e = basket_edges(spark, sf_dir, cap=5)  # cached pin, shared build
     adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
@@ -1385,8 +1382,8 @@ def label_prop_round(adj: DataFrame, labels: DataFrame) -> DataFrame:
     """One synchronous vote round, pre-materialization: labeled
     neighbors vote along adj, still-unlabeled nodes take the argmax
     (count DESC, label ASC). Exposed so plan contracts can inspect the
-    per-round physical plan — the declared key eagerly checkpoints each
-    round, which hides this machinery from the final explain."""
+    per-round physical plan — the declared key pins each round, which
+    hides this machinery from the final explain."""
     from pyspark.sql.window import Window
 
     votes = (
@@ -1430,12 +1427,11 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round exactly one adjacency-sized shuffle (adj JOIN
     labels on the neighbor key) then a (node,label)-keyed count; label
-    state is node-cardinality and pinned (localCheckpoint) so round
-    t+1 starts from materialized state, not a replayed lineage of
-    round t. Votes never materialize more than |adj| rows; the argmax
-    window partitions by node (never global). At 1000 executors:
-    co-partition adj and labels on the node key, rounds stay
-    constant-state like the pagerank loop."""
+    state is node-cardinality and pinned (io.pin) so round t+1 reads
+    round t's materialized state instead of recomputing it. Votes never
+    materialize more than |adj| rows; the argmax window partitions by
+    node (never global). At 1000 executors: co-partition adj and labels
+    on the node key, rounds stay constant-state like the pagerank loop."""
     e = basket_edges(spark, sf_dir, cap=5)  # cached pin, shared build
     adj = e.select("u", "v").unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1444,18 +1440,14 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("label")
     )
-    labels = (
-        nodes.filter(F.col("node") % LP_SEED_MOD == 0)
-        .join(part, "node")
-        .localCheckpoint(eager=True)
-    )
+    labels = pin(nodes.filter(F.col("node") % LP_SEED_MOD == 0).join(part, "node"))
     out = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assigned")
     ).select(F.lit(0).cast("bigint").alias("round"), "label", "n_assigned")
 
     for t in range(1, LP_ROUNDS + 1):
-        newly = label_prop_round(adj, labels).localCheckpoint(eager=True)
-        labels = labels.unionByName(newly).localCheckpoint(eager=True)
+        newly = pin(label_prop_round(adj, labels))
+        labels = pin(labels.unionByName(newly))
         out = out.unionByName(
             newly.groupBy("label")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_assigned"))

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_clustering_spark.functions.detagg import dround, dsum, sql_dround, sql_dsum
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import pin, table
 from spark_clustering_spark.registry import query
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
@@ -1872,13 +1872,11 @@ def q_ts_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     users×days — already the smallest exact representation of the
     problem."""
     ev = table(spark, sf_dir, "events")
-    du = (
+    du = pin(  # reused by dau/wau/mau
         ev.select(
             F.expr(f"unix_micros(ts) div {DAY_US}").alias("day_id"),
             "user_id",
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # pin: reused by dau/wau/mau
+        ).distinct()
     )
     days = du.select("day_id").distinct()
 

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from spark_clustering_spark.functions.detagg import dround
 from spark_clustering_spark.functions.distance import as_double_array, euclidean
 from spark_clustering_spark.functions.rng import lcg_uniform, sql_lcg_uniform
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import pin, table
 from spark_clustering_spark.registry import query
 
 SQL_DIMS = """dims AS (
@@ -406,14 +406,17 @@ def q_vec_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("va") * F.col("vb")).cast(DEC)).cast("double").alias("sxy"),
         )
     )
-    cov = p.select(
-        "i",
-        "j",
-        (
-            F.col("sxy") / F.col("n")
-            - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))
-        ).alias("c"),
-    ).localCheckpoint(eager=True)  # d^2 rows; consumed by both phases
+    # d^2 rows; consumed by both phases
+    cov = pin(
+        p.select(
+            "i",
+            "j",
+            (
+                F.col("sxy") / F.col("n")
+                - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))
+            ).alias("c"),
+        )
+    )
 
     def power(mat: DataFrame, val_col: str):
         v = mat.select("j").distinct().select(
@@ -445,11 +448,11 @@ def q_vec_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1/n1 are d-row / 1-row results consumed by three joins, and the
     # deflated matrix feeds another full power phase — pin them so the
     # first phase's chained-join lineage isn't re-executed per consumer
-    v1 = v1.localCheckpoint(eager=True)
-    n1 = n1.localCheckpoint(eager=True)
+    v1 = pin(v1)
+    n1 = pin(n1)
     va = v1.select(F.col("j").alias("i"), F.col("v").alias("via"))
     vb = v1.select("j", F.col("v").alias("vjb"))
-    cov2 = (
+    cov2 = pin(
         cov.join(F.broadcast(va), "i")
         .join(F.broadcast(vb), "j")
         .crossJoin(F.broadcast(n1))
@@ -458,7 +461,6 @@ def q_vec_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "j",
             (F.col("c") - F.col("nrm") * F.col("via") * F.col("vjb")).alias("c2"),
         )
-        .localCheckpoint(eager=True)
     )
     v2, n2 = power(cov2, "c2")
     return v2.crossJoin(F.broadcast(n2)).select(

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_clustering_spark.functions.porthash import sql_hex_int
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import pin, table
 from spark_clustering_spark.pipeline.dedup import shingles
 from spark_clustering_spark.registry import query
 
@@ -308,11 +308,8 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale-honest: the eval set is bounded by design at any corpus
     # size (that is the premise of broadcasting it) — the training
     # side stays streaming, never materialized.
-    ev = (
-        g.filter(F.pmod("doc_id", F.lit(DECON_MOD)) == 0)
-        .select("shingle")
-        .distinct()
-        .localCheckpoint(eager=False)
+    ev = pin(
+        g.filter(F.pmod("doc_id", F.lit(DECON_MOD)) == 0).select("shingle").distinct()
     )
     bf = bloom_build(ev)
     train = g.filter(F.pmod("doc_id", F.lit(DECON_MOD)) != 0)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from spark_clustering_spark.functions.detagg import dround, sql_dround
 from spark_clustering_spark.functions.porthash import md5_int32, sql_hex_int
-from spark_clustering_spark.io import table
+from spark_clustering_spark.io import pin, table
 from spark_clustering_spark.registry import query
 
 # 16 minhash permutations in 4 bands of 4 rows; coefficients from a
@@ -351,7 +351,7 @@ def connected_components(
     ``small_graph_threshold`` pairs the exact union-find runs on the
     driver — identical result, none of the per-round job overhead.
     Larger graphs use iterative min-label joins (O(diameter) rounds,
-    one shuffle each, lineage cut per round); near-dup clusters are
+    one shuffle each, each round's labels pinned); near-dup clusters are
     near-cliques so this converges in 2-3 rounds. ``pairs``:
     (doc_a, doc_b). Returns (doc_id, component) for every node
     appearing in any pair."""
@@ -362,9 +362,58 @@ def connected_components(
     # whatever the probe materializes, so on the big-graph path the
     # candidate-pair pipeline is never recomputed for `edges`.
     pairs = pairs.select("doc_a", "doc_b").persist()
-    sample = pairs.limit(small_graph_threshold + 1).collect()
-    if len(sample) <= small_graph_threshold:
+    edges = None
+    try:
+        sample = pairs.limit(small_graph_threshold + 1).collect()
+        if len(sample) > small_graph_threshold:
+            edges = (
+                pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+                .unionByName(
+                    pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+                )
+                .distinct()
+                .persist()
+            )
+            labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
+                "component", F.col("doc_id")
+            )
+            converged = False
+            for _ in range(max_iter):
+                neighbor_min = (
+                    edges.join(
+                        labels.select(
+                            F.col("doc_id").alias("dst"),
+                            F.col("component").alias("n_comp"),
+                        ),
+                        "dst",
+                    )
+                    .groupBy(F.col("src").alias("doc_id"))
+                    .agg(F.min("n_comp").alias("neighbor_comp"))
+                )
+                new_labels = pin(
+                    labels.join(neighbor_min, "doc_id", "left").select(
+                        "doc_id",
+                        F.least(
+                            "component", F.coalesce("neighbor_comp", "component")
+                        ).alias("component"),
+                    )
+                )
+                changed = (
+                    new_labels.alias("n")
+                    .join(labels.alias("o"), "doc_id")
+                    .filter(F.col("n.component") != F.col("o.component"))
+                    .limit(1)
+                    .count()
+                )
+                labels = new_labels
+                if not changed:
+                    converged = True
+                    break
+    finally:
+        if edges is not None:
+            edges.unpersist()
         pairs.unpersist()
+    if edges is None:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -383,53 +432,6 @@ def connected_components(
                 parent[hi] = lo
         rows = [(n, find(n)) for n in sorted(parent)]
         return spark.createDataFrame(rows, "doc_id BIGINT, component BIGINT")
-
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
-        "component", F.col("doc_id")
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("dst"), F.col("component").alias("n_comp")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("n_comp").alias("neighbor_comp"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "component", F.coalesce("neighbor_comp", "component")
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if not changed:
-            converged = True
-            break
-    edges.unpersist()
-    pairs.unpersist()
     if not converged:
         # Component chains with diameter > max_iter would silently come
         # back split; make that loud instead.
@@ -1073,11 +1075,11 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # the shingle stream feeds FOUR consumers (signatures, per-doc
     # sizes, both sides of the exact-Jaccard verify join) and the
-    # signature table THREE (pairs, sig_a, sig_b) — pin both lazily so
-    # the explode+md5 pipeline runs once per query, not 4x/3x (the
-    # same reuse pinning q_dedup_lsh_tuning applies)
-    sh = shingles(d).localCheckpoint(eager=False)
-    sig = minhash_signatures(sh).localCheckpoint(eager=False)
+    # signature table THREE (pairs, sig_a, sig_b) — pin both so the
+    # explode+md5 pipeline runs once per query, not 4x/3x (the same
+    # reuse pinning q_dedup_lsh_tuning applies)
+    sh = pin(shingles(d))
+    sig = pin(minhash_signatures(sh))
     pairs = lsh_candidate_pairs(sig)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -1169,7 +1171,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprints feed band expansion AND both pair sides -- pin the
     # doc-cardinality (5 ints/doc) table instead of re-running the
     # most compute-amplified map in the repo three times
-    fp = fp.localCheckpoint(eager=True)
+    fp = pin(fp)
     bands = fp.select(
         "doc_id",
         F.explode(
@@ -1436,7 +1438,7 @@ def q_dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     point, since the S-curve threshold (1/b)^(1/r) trades candidate
     volume (cost) against recall at the target similarity.
 
-    Scale: signatures are computed ONCE (eager checkpoint) and each
+    Scale: signatures are computed ONCE (pinned) and each
     config re-bands the 16x8-byte sig rows — never the text; the exact
     Jaccard verification runs only on the DEDUPLICATED union of
     candidates (the LSH promise: candidate volume << all pairs), as a
@@ -1444,9 +1446,9 @@ def q_dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # the shingle stream feeds FOUR consumers (signatures, per-doc
     # sizes, both sides of the exact-Jaccard verification join); pin it
-    # lazily so the explode runs once per query, not four times
-    sh = shingles(docs).localCheckpoint(eager=False)
-    sig = minhash_signatures(sh).localCheckpoint(eager=True)  # reused 3x
+    # so the explode runs once per query, not four times
+    sh = pin(shingles(docs))
+    sig = pin(minhash_signatures(sh))  # reused 3x
     cfgs = []
     for r in _TUNE_ROWS:
         nb = _NUM_HASHES // r
@@ -1490,7 +1492,7 @@ def q_dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     allp = cfgs[0]
     for p in cfgs[1:]:
         allp = allp.unionAll(p)
-    allp = allp.localCheckpoint(eager=True)  # reused: cand dedup + cfg join
+    allp = pin(allp)  # reused: cand dedup + cfg join
     cand = allp.select("doc_a", "doc_b").distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     ga = sh.select(F.col("doc_id").alias("doc_a"), "shingle")

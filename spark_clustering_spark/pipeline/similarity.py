@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 from spark_clustering_spark.functions.detagg import DEC, dround, sql_dround
 from spark_clustering_spark.functions.distance import as_double_array, cosine, dot_dec
 from spark_clustering_spark.functions.rng import py_lcg_uniform
-from spark_clustering_spark.io import artifact, shuffle_width, table
+from spark_clustering_spark.io import artifact, pin, shuffle_width, table
 from spark_clustering_spark.registry import query
 
 N_PROBES = 5
@@ -174,8 +174,8 @@ def table_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-artifact store (io.artifact) and shared by every declared
     key that routes through it: six keys train the IDENTICAL quantizer
     (same corpus, same seeded init, same Lloyd steps), so per session it
-    is one artifact, pinned by ivf_train's own eager checkpoint
-    (≤ nlist·d rows — bounded state) and dropped with its scope. Keys
+    is one artifact, pinned by ivf_train (≤ nlist·d rows — bounded
+    state) and unpersisted with its scope. Keys
     that train on anything other than the raw table (e.g.
     q_sim_ivfpq_topk's residual PQ) store their own kind."""
     return artifact(
@@ -354,8 +354,8 @@ def ivf_train(
     if n_iter > 0:
         # nlist rows of k*d doubles -- pin them so the two consumers
         # (inverted-list assignment and probe routing) don't re-run the
-        # training subtree, and per-step lineage doesn't stack
-        cents = cents.localCheckpoint(eager=True)
+        # training subtree
+        cents = pin(cents)
     return cents
 
 
@@ -597,7 +597,7 @@ def pq_train(ve: DataFrame, n_subs: int = PQ_SUBS, subdim: int = PQ_SUBDIM,
         cents = cents.join(newv, ["s", "cid"], "left").select(
             "s", "cid", F.coalesce("mvec", "cvec").alias("cvec")
         )
-    return cents.localCheckpoint(eager=True)
+    return pin(cents)
 
 
 def pq_encode(ve: DataFrame, cents: DataFrame,
@@ -911,16 +911,18 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "vec", F.col("cid").alias("list_id"),
         F.col("cvec").alias("lvec"),
     )
-    resid = lists.select(
-        "vec_id",
-        F.zip_with("vec", "lvec", lambda x, y: x - y).alias("vec"),
-        "list_id",
-    ).localCheckpoint(eager=True)
+    resid = pin(
+        lists.select(
+            "vec_id",
+            F.zip_with("vec", "lvec", lambda x, y: x - y).alias("vec"),
+            "list_id",
+        )
+    )
     # the residual-PQ codebook is deterministic per (app, sf_dir) —
     # coarse quantizer, residuals, and the seeded Lloyd steps all are —
     # so it is trained once into the session-artifact store beside the
     # coarse quantizer (guide §4.3 heavyweight init once; bounded
-    # n_subs·k-row artifact, pinned by pq_train's own eager checkpoint).
+    # n_subs·k-row artifact, pinned by pq_train).
     # Residuals themselves stay per-run: only the trained MODEL is
     # shared, never data.
     cents = artifact(
@@ -1306,7 +1308,7 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pool is consumed by cc (both sides), s1, and rem1 -- pin the
     # 30-row result instead of re-running the scoring pipeline 4x
-    pool = pool.localCheckpoint(eager=True)
+    pool = pin(pool)
     a = pool.select("probe_id", F.col("cand_id").alias("ca"), F.col("vec").alias("va"))
     b = pool.select("probe_id", F.col("cand_id").alias("cb"), F.col("vec").alias("vb"))
     cc = (

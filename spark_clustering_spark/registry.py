@@ -8,8 +8,11 @@ rows-only check (reserved for genuinely non-SQL-expressible ops).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
+
+from spark_clustering_spark.io import query_scope
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLE: dict[str, str] = {}
@@ -22,13 +25,19 @@ def query(name: str, oracle: str | None = None):
     (region nation customer supplier part orders lineitem events
     documents embeddings). Column names/aliases MUST match the Spark
     result — the driver sorts columns by name before value-hashing.
+    Each call runs in ``io.query_scope``, which owns the frames it pins.
     """
 
     def deco(fn):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def scoped(*args, **kwargs):
+            with query_scope():
+                return fn(*args, **kwargs)
+
+        QUERIES[name] = scoped
         if oracle is not None:
             ORACLE[name] = oracle.strip()
-        return fn
+        return scoped
 
     return deco
 

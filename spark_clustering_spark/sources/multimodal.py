@@ -947,7 +947,9 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 8 bytes/item, banding is one groupBy(band, key) with in-bucket
     pair expansion (never a self-join), pixels stay in the task that
     hashed them."""
-    fp = phash_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
+    from spark_clustering_spark.io import pin
+
+    fp = pin(phash_fingerprints(spark, sf_dir))
     chunks = [
         F.shiftrightunsigned(F.col("phash"), 16 * c)
         .bitwiseAND(F.lit(0xFFFF).cast("bigint"))

@@ -90,8 +90,10 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 8) -> str:
     drains, so the next replay may replace it."""
     out = scratch("stream_replay")
     ev = table(spark, sf_dir, "events").persist()
-    write_replay_chunks(ev, "event_id", out, n_chunks)
-    ev.unpersist()
+    try:
+        write_replay_chunks(ev, "event_id", out, n_chunks)
+    finally:
+        ev.unpersist()
     return out
 
 
@@ -299,8 +301,10 @@ def stream_cluster_volume(
     # persist: the assign pipeline would otherwise recompute once per
     # chunk write plus once for the max-id probe (9 full jobs)
     timed = timed.persist()
-    write_replay_chunks(timed, "vec_id", out, n_chunks=8)
-    timed.unpersist()
+    try:
+        write_replay_chunks(timed, "vec_id", out, n_chunks=8)
+    finally:
+        timed.unpersist()
     src = (
         spark.readStream.schema("vec_id BIGINT, cluster_id BIGINT, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1)

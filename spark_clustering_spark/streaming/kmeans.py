@@ -56,8 +56,10 @@ def replay_points_dir(
 
     out = scratch("stream_kmeans_replay")
     pts = points_df(spark, sf_dir).persist()
-    write_replay_chunks(pts, "vec_id", out, n_chunks)
-    pts.unpersist()
+    try:
+        write_replay_chunks(pts, "vec_id", out, n_chunks)
+    finally:
+        pts.unpersist()
     return out
 
 

@@ -56,6 +56,23 @@ class TestKMeans:
         assert r1.history == r2.history
         assert r1.centroids == r2.centroids
 
+    def test_failed_fit_releases_its_cache(self, spark, monkeypatch):
+        """A fit whose kernel raises must not leave its input cached for
+        the rest of the session."""
+        from spark_clustering_spark.ml import kmeans
+        from spark_clustering_spark.operators.clustering import points_df
+
+        def failing_kernel(*args, **kwargs):
+            raise RuntimeError("kernel failed")
+
+        monkeypatch.setattr(kmeans, "lloyd_iteration_multi", failing_kernel)
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        fresh = points_df(spark, SF_SMALL).filter("vec_id >= 0")
+        with pytest.raises(RuntimeError, match="kernel failed"):
+            kmeans.fit_kmeans(spark, fresh, k=3, num_iter=2, seed=1)
+        assert jsc.getPersistentRDDs().size() == before
+
     def test_labels_in_range_and_k_centroids(self, spark, points):
         from pyspark.sql import functions as F
 

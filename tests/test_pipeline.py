@@ -698,6 +698,91 @@ class TestSpread:
         qs["q_sink_partitioned"](spark, SF_SMALL).collect()
         assert sorted(r["iter"] for r in metrics.collect()) == list(range(5))
 
+    @staticmethod
+    def _pins():
+        """(the current query's pins, the store's pins)."""
+        from spark_clustering_spark import io
+
+        store = [df for k, v in io._PINS.items() if k is not None for df in v]
+        return list(io._PINS.get(None, [])), store
+
+    def test_pins_are_bounded_by_one_key(self, spark):
+        """Pinning keys run in a row, each consumed, with no garbage
+        collection in between: after each key the session holds at
+        most that key's pins plus the store's, because a key's pins
+        are unpersisted when the next key begins."""
+        import __spark_entry__ as e
+
+        qs = e.queries()
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        keys = (
+            "q_dedup_minhash_est", "q_graph_label_prop", "q_vec_pca_deflate",
+            "q_kmeans_iter2", "q_sim_mmr",
+        )
+        for key in keys:
+            qs[key](spark, SF_SMALL).collect()
+            query, store = self._pins()
+            assert query, key
+            held = set(jsc.getPersistentRDDs().keySet()) - before
+            assert len(held) <= len(query) + len(store), (key, held)
+
+    def test_frame_read_after_its_pins_are_released_recomputes(self, spark):
+        """A frame returned by one key, executed, then read again after
+        another key released its pins, gives the same rows as a fresh
+        call: a released pin keeps its lineage."""
+        import __spark_entry__ as e
+
+        qs = e.queries()
+        a = qs["q_sim_mmr"](spark, SF_SMALL)
+        first = sorted(map(tuple, a.collect()))
+        a_pins, _ = self._pins()
+        qs["q_kmeans_iter2"](spark, SF_SMALL).collect()
+        assert a_pins
+        assert not any(df.storageLevel.useMemory for df in a_pins)
+        again = sorted(map(tuple, a.collect()))
+        fresh = sorted(map(tuple, qs["q_sim_mmr"](spark, SF_SMALL).collect()))
+        assert first and first == again == fresh
+
+    def test_nested_key_keeps_the_outer_pins(self, spark, duck):
+        """A key called from inside another query does not release the
+        caller's pins; q_dedup_simhash_pairs (which calls
+        q_dedup_simhash) still matches its oracle."""
+        import __spark_entry__ as e
+
+        from spark_clustering_spark.io import pin, query_scope
+
+        key = "q_dedup_simhash_pairs"
+        with query_scope():
+            pin(spark.range(10)).count()
+            (outer,) = self._pins()[0]
+            got = e.queries()[key](spark, SF_SMALL)
+            query, _ = self._pins()
+            assert any(df is outer for df in query)
+            assert outer.storageLevel.useMemory
+            cols = sorted(got.columns)
+            rows = sorted(map(tuple, got.select(*cols).collect()))
+        oracle = duck.execute(
+            f"SELECT {', '.join(cols)} FROM ({e.oracle_sql()[key]})"
+        ).fetchall()
+        assert rows and rows == sorted(map(tuple, oracle))
+
+    def test_no_local_checkpoint_in_the_package(self):
+        """Reused frames are pinned through io.pin (persist, lineage
+        kept, one owner); no module cuts lineage with a localCheckpoint."""
+        from pathlib import Path
+
+        import spark_clustering_spark
+
+        root = Path(spark_clustering_spark.__file__).parent
+        hits = [
+            f"{p.relative_to(root)}:{i}"
+            for p in sorted(root.rglob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if ".localCheckpoint(" in line
+        ]
+        assert not hits, hits
+
 
 class TestRound4bOps:
     """Invariants for the SemDeDup / MV / DSIR / Gopher / CCNet /

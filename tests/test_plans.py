@@ -630,16 +630,16 @@ def test_rfm_and_gini_no_single_partition_exchange(spark, qs):
 def test_welch_and_chisq_single_fact_pass(spark, qs):
     """Sufficient-statistic tests: one partial+final aggregate over
     the fact input, never a window. Welch is a pure two-exchange
-    global aggregate; chi-squared pins its r*c cell table with an
-    eager checkpoint so every later exchange (marginals, broadcasts,
-    the one-row answer) carries <= 25 rows — the fact is read once."""
+    global aggregate; chi-squared pins its r*c cell table (io.pin) so
+    every later exchange (marginals, broadcasts, the one-row answer)
+    carries <= 25 rows — the fact is read once."""
     df = qs["q_agg_welch_ttest"](spark, SF_SMALL)
     assert "WindowExec" not in formatted_plan(df)
     assert num_shuffles(df) <= 2, num_shuffles(df)
     df = qs["q_agg_chisq"](spark, SF_SMALL)
     plan = formatted_plan(df)
     assert "WindowExec" not in plan
-    # the fact join was cut off by the checkpoint: no parquet scan of
+    # the fact join sits behind the pin: no parquet scan of
     # orders/customer may remain in the downstream plan
     assert "parquet" not in plan.lower(), plan[:800]
 
@@ -813,9 +813,9 @@ def test_dataset_card_digest_narrows_before_expand(spark, qs):
 
 def test_label_prop_round_window_partitions_by_node(spark, qs):
     """Per-round argmax windows partition by node (never global) and
-    the vote aggregation combines map-side. The declared key eagerly
-    checkpoints each round, so the contract inspects the exposed
-    round function's pre-materialization plan."""
+    the vote aggregation combines map-side. The declared key pins each
+    round, so the contract inspects the exposed round function's
+    pre-materialization plan."""
     from pyspark.sql import functions as F
 
     from spark_clustering_spark.operators.graph import (

@@ -8,9 +8,6 @@ scope's entries) may change HOW results are computed, never WHAT.
 
 from __future__ import annotations
 
-import gc
-import time
-
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -55,7 +52,7 @@ def test_packed_key_guard_routes_large_ids_to_shuffle_path(spark, monkeypatch):
     transient frame may reuse the first one's object id, so each must
     get its own gate result from the stats stored beside its own edges
     — nothing in the store is keyed by object identity."""
-    from spark_clustering_spark.io import release
+    from spark_clustering_spark.io import pin, release
     from spark_clustering_spark.operators import graph
 
     shift = 1 << 31
@@ -67,16 +64,17 @@ def test_packed_key_guard_routes_large_ids_to_shuffle_path(spark, monkeypatch):
         monkeypatch.setattr(
             graph,
             "_build_edges",
-            lambda s, d, cap: spark.createDataFrame(
-                [(u + offset, v + offset) for u, v in base_edges],
-                "u bigint, v bigint",
-            ).localCheckpoint(eager=False),
+            lambda s, d, cap: pin(
+                spark.createDataFrame(
+                    [(u + offset, v + offset) for u, v in base_edges],
+                    "u bigint, v bigint",
+                )
+            ),
         )
         ok = graph._bcast_path_ok(spark, sf_dir, 5)
         r = _rows(graph.q_graph_jaccard_linkpred(spark, sf_dir))
         aa = _rows(graph.q_graph_adamic_adar(spark, sf_dir))
         release()
-        gc.collect()
         return ok, r, aa
 
     small_ok, r_small, aa_small = _gate_and_run(0)
@@ -136,9 +134,9 @@ def test_store_evicts_other_scopes(spark, monkeypatch):
 def test_evicted_edge_pins_are_reclaimed(spark):
     """ADVICE r11's "pins accumulate across sf_dirs" as a number: the
     executor-side pins of an evicted edge artifact must leave
-    getPersistentRDDs once their scope is dropped (the ContextCleaner
-    unpersists a localCheckpoint when its driver reference is
-    collected), bringing the count back to where it started."""
+    getPersistentRDDs the moment their scope is dropped (eviction
+    unpersists an entry's pins; no garbage collection is involved),
+    bringing the count back to where it started."""
     from spark_clustering_spark.io import artifact, release
     from spark_clustering_spark.operators import graph
 
@@ -155,14 +153,7 @@ def test_evicted_edge_pins_are_reclaimed(spark):
     assert ours
 
     artifact(spark, "/fake/other_scope", "marker", lambda: 0)  # evicts
-    deadline = time.time() + 30
-    while True:
-        gc.collect()
-        spark._jvm.System.gc()
-        now = pinned()
-        if not (ours & now) or time.time() > deadline:
-            break
-        time.sleep(0.5)
+    now = pinned()
     assert not (ours & now), sorted(ours & now)
     assert len(now) <= start
     release()
