@@ -165,11 +165,13 @@ def main() -> None:
     # sample is more than 2x the first: this host shows episodic
     # multi-second steal bursts, and when BOTH of two samples land in a
     # burst the min still misreports a query 3-5x (documented in
-    # PERF.md — q_join_anti "benched" 3.1 s vs 0.2 s steady state). A
-    # slow second sample is the one case where the min can be an
-    # inflated first sample, so only then is a third sample worth its
-    # cost; a slow FIRST sample is usually a one-time build or
-    # first-use cost, and the min already keeps the warm second one.
+    # PERF.md — q_join_anti "benched" 3.1 s vs 0.2 s steady state).
+    # Pass 1 pays each key's first-use builds (stored artifacts, file
+    # caches, JIT), so a slow FIRST sample is expected and the min
+    # already keeps the warm second one; a third sample is bought only
+    # when the second is the slow one. A burst that lands only in
+    # pass 1 is therefore no longer escalated, and neither is one that
+    # inflates a fast second sample while the first paid a build.
     # The min is the steady-state number — the one that actually
     # scales to cluster sizing.
     # The two samples are INTERLEAVED ACROSS FULL PASSES over the key
@@ -221,8 +223,8 @@ def main() -> None:
             if name not in errored:
                 _run_once(name)
         canary_runs.append(_canary())
-    # escalation pass: a second sample more than 2x the first is the
-    # burst signature — only then buy a third
+    # escalation pass: only a second sample more than 2x the first
+    # buys a third
     for name in names:
         runs = runs_by_key[name]
         if name not in errored and len(runs) == 2 and runs[1] > 2 * max(

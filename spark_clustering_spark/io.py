@@ -62,13 +62,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # The session-artifact store: work many declared keys share (edge builds
 # and their stats, trained quantizers), keyed by (applicationId, sf_dir,
 # kind) so two scales never alias and a restarted session never reads a
-# dead context's entries.
+# dead context's entries. Each entry is (value, the pins its build made).
 _ARTIFACTS: dict = {}
-# Pinned frames by owner: a store key for pins made while that entry is
-# built, None for the current query's. _BUILDING is the stack of store
-# keys under construction; _QUERY_DEPTH counts nested query calls.
-_PINS: dict = {}
+# Pin lists: one per store entry under construction (innermost last),
+# and the current query's; _QUERY_DEPTH counts nested query calls.
 _BUILDING: list = []
+_QUERY_PINS: list = []
 _QUERY_DEPTH = 0
 
 
@@ -85,28 +84,27 @@ def artifact(spark: SparkSession, sf_dir: str, kind, build):
     scope = (spark.sparkContext.applicationId, sf_dir)
     key = (*scope, kind)
     if key in _ARTIFACTS:
-        return _ARTIFACTS[key]
-    _BUILDING.append(key)
+        return _ARTIFACTS[key][0]
+    pins: list = []
+    _BUILDING.append(pins)
     try:
         value = build()
     except BaseException:
-        _unpin(key)
+        _unpin(pins)
         raise
     finally:
         _BUILDING.pop()
     for k in [k for k in _ARTIFACTS if k[:2] != scope]:
-        del _ARTIFACTS[k]
-    for k in [k for k in _PINS if k is not None and k[:2] != scope]:
-        _unpin(k)
-    _ARTIFACTS[key] = value
+        _unpin(_ARTIFACTS.pop(k)[1])
+    _ARTIFACTS[key] = (value, pins)
     return value
 
 
 def release() -> None:
     """Drop every stored artifact of every scope and unpersist their pins."""
+    for _, pins in _ARTIFACTS.values():
+        _unpin(pins)
     _ARTIFACTS.clear()
-    for k in [k for k in _PINS if k is not None]:
-        _unpin(k)
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -114,26 +112,39 @@ def pin(df: DataFrame) -> DataFrame:
     once, until its owner ends: the store entry being built, else the
     current query (see ``query_scope``).
 
-    The rows are cached with ``persist()``, which keeps lineage: a frame
-    read after its pin was released recomputes the same rows instead of
-    losing blocks. The returned frame reads that cache through a plain
-    RDD leaf, as a checkpoint would, not through the cached plan: Spark
-    4.1's AQE reuses no exchange above a cached-plan scan, and every
-    plan update carries each nested cached plan along, which made the
-    iterative keys several times slower (k-core 1.9 s to 16 s at sf0.1
-    on 4 cores). The leaf keeps the cached plan's statistics and output
-    partitioning."""
-    df.persist()
-    _PINS.setdefault(_BUILDING[-1] if _BUILDING else None, []).append(df)
-    jdf, sql = df._jdf, df.sparkSession._jvm.org.apache.spark.sql
+    The rows are cached column-wise from ``df``'s own executed plan, so
+    adaptive execution coalesces its last shuffle as it would for any
+    query. ``df.persist()`` would plan it through the CacheManager
+    instead, which on Spark 4.1 turns the final-stage shuffle
+    optimizations off for cached plans: the last shuffle inside a pin,
+    and every later read of the pin, then ran one task per
+    ``spark.sql.shuffle.partitions`` (200 on a default session)
+    whatever the data size. The cache keeps lineage: a frame read after
+    its pin was released recomputes the same rows instead of losing
+    blocks. The returned frame reads the cache through a plain RDD
+    leaf, as a checkpoint would: AQE reuses no exchange above a
+    cached-plan scan, and every plan update carries each nested cached
+    plan along, which made the iterative keys several times slower
+    (k-core 1.9 s to 16 s at sf0.1 on 4 cores). The leaf keeps the
+    cache's statistics and output partitioning."""
+    jdf, jvm = df._jdf, df.sparkSession._jvm
+    sql = jvm.org.apache.spark.sql
+    relation = getattr(getattr(sql.execution.columnar, "InMemoryRelation$"), "MODULE$").apply(
+        jvm.org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK(),
+        jdf.queryExecution(),
+        jvm.scala.Option.empty(),
+    )
+    (_BUILDING[-1] if _BUILDING else _QUERY_PINS).append(relation.cacheBuilder())
+    cached = sql.classic.Dataset.ofRows(jdf.sparkSession(), relation)
     logical_rdd = getattr(getattr(sql.execution, "LogicalRDD$"), "MODULE$")
-    leaf = logical_rdd.fromDataset(jdf.queryExecution().toRdd(), jdf, jdf.isStreaming())
+    leaf = logical_rdd.fromDataset(cached.queryExecution().toRdd(), cached, jdf.isStreaming())
     return DataFrame(sql.classic.Dataset.ofRows(jdf.sparkSession(), leaf), df.sparkSession)
 
 
-def _unpin(owner) -> None:
-    for df in _PINS.pop(owner, []):
-        df.unpersist()
+def _unpin(pins: list) -> None:
+    for cache in pins:
+        cache.clearCache(False)
+    pins.clear()
 
 
 @contextmanager
@@ -143,7 +154,7 @@ def query_scope():
     a query), so a key that calls another key keeps its own pins."""
     global _QUERY_DEPTH
     if _QUERY_DEPTH == 0:
-        _unpin(None)
+        _unpin(_QUERY_PINS)
     _QUERY_DEPTH += 1
     try:
         yield

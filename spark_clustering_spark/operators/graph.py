@@ -111,11 +111,12 @@ def _build_edges(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     # per-task key cardinality stays bounded at ANY scale factor (and
     # AQE never coalesces a user-specified repartition). Below the
     # threshold (sf<=1) the partial aggregate fits comfortably and the
-    # extra exchange is pure tax — round-9's sf0.1 graph-family
-    # regression (modularity 0.52→1.17 s, measured together with an
-    # eager materialization) — so the small path keeps the planner's
-    # own placement. Same rows out either way — dedup placement is an
-    # execution detail.
+    # extra exchange + eager materialization is pure tax — round-9's
+    # sf0.1 graph-family regression (modularity 0.52→1.17 s) — so the
+    # small path keeps the planner's own placement. (io.pin computes
+    # the small path's edges eagerly too; that half of the round-9
+    # cause was not re-measured.) Same rows out either way — dedup
+    # placement is an execution detail.
     # Threshold 10M (ADVICE r10): sf1 lineitem is ~6.0M rows and ran
     # green on the planner-placed path for rounds 6-8, so it belongs on
     # the small path; the 16 GB-pool blowup the heavy path cures was

@@ -703,8 +703,8 @@ class TestSpread:
         """(the current query's pins, the store's pins)."""
         from spark_clustering_spark import io
 
-        store = [df for k, v in io._PINS.items() if k is not None for df in v]
-        return list(io._PINS.get(None, [])), store
+        store = [c for _, pins in io._ARTIFACTS.values() for c in pins]
+        return list(io._QUERY_PINS), store
 
     def test_pins_are_bounded_by_one_key(self, spark):
         """Pinning keys run in a row, each consumed, with no garbage
@@ -739,7 +739,7 @@ class TestSpread:
         a_pins, _ = self._pins()
         qs["q_kmeans_iter2"](spark, SF_SMALL).collect()
         assert a_pins
-        assert not any(df.storageLevel.useMemory for df in a_pins)
+        assert not any(c.isCachedColumnBuffersLoaded() for c in a_pins)
         again = sorted(map(tuple, a.collect()))
         fresh = sorted(map(tuple, qs["q_sim_mmr"](spark, SF_SMALL).collect()))
         assert first and first == again == fresh
@@ -758,8 +758,8 @@ class TestSpread:
             (outer,) = self._pins()[0]
             got = e.queries()[key](spark, SF_SMALL)
             query, _ = self._pins()
-            assert any(df is outer for df in query)
-            assert outer.storageLevel.useMemory
+            assert any(c is outer for c in query)
+            assert outer.isCachedColumnBuffersLoaded()
             cols = sorted(got.columns)
             rows = sorted(map(tuple, got.select(*cols).collect()))
         oracle = duck.execute(
@@ -767,8 +767,23 @@ class TestSpread:
         ).fetchall()
         assert rows and rows == sorted(map(tuple, oracle))
 
+    def test_pin_coalesces_its_last_shuffle(self, spark):
+        """A pin is cached from the frame's own adaptive plan, so a tiny
+        aggregate is held in a coalesced partition or two, not in one
+        partition per spark.sql.shuffle.partitions (which a CacheManager
+        persist() keeps, and every read of the pin then pays)."""
+        from spark_clustering_spark.io import pin, query_scope
+
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert width > 2
+        with query_scope():
+            df = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
+            pinned = pin(df)
+            assert pinned.rdd.getNumPartitions() <= 2
+            assert sorted(map(tuple, pinned.collect())) == [(0, 4), (1, 3), (2, 3)]
+
     def test_no_local_checkpoint_in_the_package(self):
-        """Reused frames are pinned through io.pin (persist, lineage
+        """Reused frames are pinned through io.pin (cached, lineage
         kept, one owner); no module cuts lineage with a localCheckpoint."""
         from pathlib import Path
 
