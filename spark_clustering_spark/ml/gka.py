@@ -15,11 +15,15 @@ chromosomes with the dataset broadcast (gka.java:303,313); here the
   truncates lineage; each generation's reassignment is persisted and
   released when the next one replaces it).
 
-One generation = KMO (two shuffles: center means keyed on
-(member,label,dim); reassignment argmin via broadcast of the P·k·d
-center table), mutation (window CDF per member + a ≤P-row driver
-patch), fitness (one P-row aggregate), driver-side roulette selection
-(Q8 — the wheel is P rows).
+One generation = one reassignment kernel pass (each member's argmin
+against its own broadcast centers, emitting the n·P label rows plus
+per-partition center partials), ONE collect that fuses fitness (exact
+decimal window sum per member), the mutation pick (window CDF per
+member) and those partials, a ≤P-row driver patch for the mutated
+genes, and driver-side roulette selection (Q8 — the wheel is P rows).
+The next generation's centers are derived on the driver from the
+patched partials; only generation 0 runs a dedicated center job
+(``gka_member_centers``).
 
 Determinism (Q5): every draw is the shared integer LCG keyed by
 (member, generation, purpose). Q7 (GKA flavor): the mutated gene's
@@ -79,7 +83,7 @@ def _gen_stats_and_picks(
     mutating: list[int],
     u2: dict[int, float],
     cm: float,
-    partials: DataFrame | None = None,
+    partials: DataFrame,
 ) -> tuple[dict[int, float], list[dict], dict[tuple[int, int], list]]:
     """ONE window pass over the assignment table returning both the
     per-member objectives (R13, exact decimal window sum) and the
@@ -94,11 +98,11 @@ def _gen_stats_and_picks(
     ≤ 2P + a few rows are collected — fusing fitness into the pick job
     saves a full aggregate job per generation.
 
-    When ``partials`` is given (the kind=1 center-partial rows the
-    reassign kernel emits), they ride the SAME collect as extra rows
-    and come back as ``{(member, label): [n, sum_vec ndarray]}`` —
-    P·k·num_partitions tiny rows, combined in collect order exactly
-    like ``_driver_combine``."""
+    ``partials`` (the kind=1 center-partial rows the reassign kernel
+    emits) ride the SAME collect as extra rows and come back as
+    ``{(member, label): [n, sum_vec ndarray]}`` — P·k·num_partitions
+    tiny rows, combined in collect order exactly like
+    ``_driver_combine``."""
     w_all = Window.partitionBy("member_id")
     w_ord = Window.partitionBy("member_id").orderBy("vec_id")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -136,22 +140,21 @@ def _gen_stats_and_picks(
             "is_first", "is_pick",
         )
     )
-    if partials is not None:
-        picked = picked.unionByName(
-            partials.select(
-                "member_id",
-                F.lit(None).cast("bigint").alias("vec_id"),
-                "label",
-                F.lit(None).cast("double").alias("dist"),
-                F.lit(None).cast("double").alias("mdist"),
-                F.lit(None).cast("double").alias("obj"),
-                F.lit(False).alias("is_first"),
-                F.lit(False).alias("is_pick"),
-                "n_points",
-                "sum_vec",
-            ),
-            allowMissingColumns=True,
-        )
+    picked = picked.unionByName(
+        partials.select(
+            "member_id",
+            F.lit(None).cast("bigint").alias("vec_id"),
+            "label",
+            F.lit(None).cast("double").alias("dist"),
+            F.lit(None).cast("double").alias("mdist"),
+            F.lit(None).cast("double").alias("obj"),
+            F.lit(False).alias("is_first"),
+            F.lit(False).alias("is_pick"),
+            "n_points",
+            "sum_vec",
+        ),
+        allowMissingColumns=True,
+    )
     rows = picked.collect()
     objs = {
         int(r["member_id"]): float(r["obj"])
@@ -162,7 +165,7 @@ def _gen_stats_and_picks(
     # scan-and-break: keep only the first qualifying gene per member
     first_gene: dict[int, dict] = {}
     for r in rows:
-        if partials is not None and r["n_points"] is not None:
+        if r["n_points"] is not None:
             key = (int(r["member_id"]), int(r["label"]))
             e = sums.get(key)
             if e is None:
@@ -244,9 +247,7 @@ def fit_gka(
             # persist (lazy) instead of an eager checkpoint: the downstream
             # jobs this generation reuse the materialization the first one
             # triggers, without paying a dedicated write job
-            mixed = gka_reassign(
-                points, centers_map, targets, emit_partials=True
-            ).persist()
+            mixed = gka_reassign(points, centers_map, targets).persist()
             if prev_mixed is not None:
                 prev_mixed.unpersist()
             prev_mixed = mixed

@@ -13,7 +13,7 @@ generalized to soft assignment):
 - the hash-verified single-step surfaces (q_ml_gmm_estep/_mstep/
   _loglik) retain the decimal-exact expression path as the oracle
   twin — the fit loop is the production/scale path, combined in
-  collect (partition) order like lloyd_iteration;
+  collect (partition) order like lloyd_iteration_multi;
 - EM guarantee kept testable: the per-iteration observed-data
   log-likelihood (computed on the CURRENT parameters, before the
   update) is non-decreasing (tests/test_round5c_ops.py).

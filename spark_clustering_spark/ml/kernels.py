@@ -9,10 +9,16 @@ path uses these Arrow-batched kernels instead, because:
   keyed on (cluster, dim) — the exploded shuffle grows linearly with
   data size;
 - the kernel computes assignment (BLAS distance matrix) AND the partial
-  per-cluster statistics inside each partition, emitting exactly k rows
-  per partition. The only shuffle is k·num_partitions tiny stat rows →
-  final combine. This is how a 100 TB Lloyd iteration must look: one
-  narrow pass, constant-size shuffle.
+  per-cluster statistics inside each partition, emitting at most k rows
+  per partition and center set. The only data leaving the pass is
+  k·num_partitions tiny stat rows per center set → final combine. This
+  is how a 100 TB Lloyd iteration must look: one narrow pass,
+  constant-size output.
+
+One Lloyd kernel (``lloyd_partials``) serves batch k-means, its
+restarts and the streaming fit. PSO's ``pso_objectives`` needs only
+the min-distance sum per particle, and GKA's per-point kernel must
+emit n·P label rows, so both keep their own pass.
 
 Determinism: identical data layout ⇒ identical float partial-sum order
 ⇒ bitwise-reproducible runs (asserted in tests). Cross-layout runs
@@ -28,9 +34,9 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-LLOYD_STATS_SCHEMA = (
-    "cluster_id INT, n_points BIGINT, sum_dist DOUBLE, sum_sq DOUBLE, "
-    "sum_vec ARRAY<DOUBLE>"
+LLOYD_MULTI_SCHEMA = (
+    "run INT, cluster_id INT, n_points BIGINT, sum_dist DOUBLE, "
+    "sum_sq DOUBLE, sum_vec ARRAY<DOUBLE>"
 )
 
 
@@ -73,91 +79,17 @@ def _driver_combine(
     return acc
 
 
-def lloyd_partial_stats(points: DataFrame, centers: np.ndarray) -> DataFrame:
-    """One Lloyd half-iteration, map-side: per partition, assign every
-    vector to its nearest center (ties → lower cluster id, matching the
-    expression path) and emit k partial-stat rows. ``points``:
-    (vec_id, vec array<double>); ``centers``: (k, d) ndarray."""
-    k, d = centers.shape
-    bc = points.sparkSession.sparkContext.broadcast(centers)
-
-    def kernel(batches) -> Iterator:
-        import pandas as pd
-
-        C = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf["vec"]), dtype=np.float64)
-            D = _dist_matrix(V, C)
-            lab = D.argmin(axis=1)  # argmin returns FIRST min → lower cid on ties
-            md = D[np.arange(len(V)), lab]
-            out = {
-                "cluster_id": [],
-                "n_points": [],
-                "sum_dist": [],
-                "sum_sq": [],
-                "sum_vec": [],
-            }
-            for c in range(k):
-                m = lab == c
-                n = int(m.sum())
-                if not n:
-                    continue
-                out["cluster_id"].append(c)
-                out["n_points"].append(n)
-                out["sum_dist"].append(float(md[m].sum()))
-                out["sum_sq"].append(float((md[m] * md[m]).sum()))
-                out["sum_vec"].append(V[m].sum(axis=0).tolist())
-            yield pd.DataFrame(out)
-
-    return points.mapInPandas(kernel, LLOYD_STATS_SCHEMA)
-
-
-def lloyd_iteration(
-    points: DataFrame, centers: np.ndarray
-) -> list[dict]:
-    """Full Lloyd iteration: map-side partials + k-row final combine.
-    Returns one dict per non-empty cluster:
-    {cluster_id, n_points, sum_dist, sum_sq, mean(list)}."""
-    partial = lloyd_partial_stats(points, centers)
-    acc = _driver_combine(
-        partial, ("cluster_id",), ("n_points", "sum_dist", "sum_sq"), "sum_vec"
-    )
-    out = []
-    for (cid,), (n, sd, ss, sv) in sorted(acc.items()):
-        out.append(
-            {
-                "cluster_id": cid,
-                "n_points": int(n),
-                "sum_dist": float(sd),
-                "sum_sq": float(ss),
-                "mean": [s / n for s in sv],
-            }
-        )
-    return out
-
-
-LLOYD_MULTI_SCHEMA = (
-    "run INT, cluster_id INT, n_points BIGINT, sum_dist DOUBLE, "
-    "sum_sq DOUBLE, sum_vec ARRAY<DOUBLE>"
-)
-
-
-def lloyd_iteration_multi(
+def lloyd_partials(
     points: DataFrame, centers_stack: dict[int, np.ndarray]
-) -> dict[int, list[dict]]:
-    """Lloyd iteration for SEVERAL independent restarts in ONE pass:
-    the kernel assigns each partition's block against every run's
-    centroid set (R small GEMMs) and emits R·k partial-stat rows per
-    partition — multi-restart costs one job per iteration instead of
-    one per (run, iteration). Results are identical to running each
-    restart alone (per-run math is independent).
-
-    ``centers_stack``: {run_id: (k, d) ndarray}. Returns
-    {run_id: [stats dicts as in lloyd_iteration]}."""
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(
+) -> DataFrame:
+    """The Lloyd half-iteration, map-side, for one or more independent
+    center sets (runs): per partition, assign every vector to the
+    nearest center of each run (ties → lower cluster id, matching the
+    expression path) and emit one partial-stat row per non-empty
+    (run, cluster) — at most R·k rows per partition, whatever the
+    partition's size. ``points``: (vec_id, vec array<double>);
+    ``centers_stack``: {run_id: (k, d) ndarray}."""
+    bc = points.sparkSession.sparkContext.broadcast(
         {int(r): np.asarray(c, dtype=np.float64) for r, c in centers_stack.items()}
     )
 
@@ -175,7 +107,7 @@ def lloyd_iteration_multi(
             }
             for run, C in stacks.items():
                 D = _dist_matrix(V, C)
-                lab = D.argmin(axis=1)
+                lab = D.argmin(axis=1)  # argmin returns FIRST min → lower cid on ties
                 md = D[np.arange(len(V)), lab]
                 for c in range(C.shape[0]):
                     m = lab == c
@@ -190,9 +122,24 @@ def lloyd_iteration_multi(
                     out["sum_vec"].append(V[m].sum(axis=0).tolist())
             yield pd.DataFrame(out)
 
-    partial = points.mapInPandas(kernel, LLOYD_MULTI_SCHEMA)
+    return points.mapInPandas(kernel, LLOYD_MULTI_SCHEMA)
+
+
+def lloyd_iteration_multi(
+    points: DataFrame, centers_stack: dict[int, np.ndarray]
+) -> dict[int, list[dict]]:
+    """One Lloyd iteration for every run of ``centers_stack`` in ONE
+    pass: ``lloyd_partials`` plus the driver combine of its
+    ≤ R·k·num_partitions rows. Per-run math is independent, so each
+    run's stats equal a one-run call exactly (asserted in tests).
+
+    ``fit_kmeans`` runs one run per restart (one job per iteration
+    instead of one per (run, iteration)); ``fit_kmeans_stream`` one
+    run per micro-batch. Returns {run_id: [{cluster_id, n_points,
+    sum_dist, sum_sq, mean(list)} per non-empty cluster, in cluster
+    order]}."""
     acc = _driver_combine(
-        partial,
+        lloyd_partials(points, centers_stack),
         ("run", "cluster_id"),
         ("n_points", "sum_dist", "sum_sq"),
         "sum_vec",
@@ -218,7 +165,13 @@ def pso_objectives(points: DataFrame, X: np.ndarray) -> np.ndarray:
     """All-particle objective evaluation in one narrow pass: per
     partition, a (batch × k) distance matrix per particle (BLAS),
     partial Σ min-dist per particle; final combine is P tiny rows.
-    ``X``: (P, k, d). Returns (P,) objectives (Q4: unsquared sums)."""
+    ``X``: (P, k, d). Returns (P,) objectives (Q4: unsquared sums).
+
+    The same nearest-centroid rule as ``lloyd_partials``, kept apart
+    because PSO needs only the min-distance sum: one run per particle
+    through the Lloyd kernel pays its per-cluster statistics too, which
+    made the 20-particle ``fit_pso_ref_config`` ~11% slower (sf0.1,
+    4 cores)."""
     P = X.shape[0]
     bc = points.sparkSession.sparkContext.broadcast(X)
 
@@ -300,14 +253,11 @@ def _segmented_sums(
     return uniq, counts, sums
 
 
+# assignment rows are kind=0 (n_points, sum_vec NULL); per-partition
+# center partials are kind=1 (vec_id, dist, mdist NULL)
 GKA_ASSIGN_SCHEMA = (
-    "member_id INT, vec_id BIGINT, label INT, dist DOUBLE, mdist DOUBLE"
-)
-
-# emit_partials=True adds per-partition center partials as kind=1 rows
-# (assignment rows are kind=0 with the extra columns NULL)
-GKA_ASSIGN_STATS_SCHEMA = (
-    GKA_ASSIGN_SCHEMA + ", kind TINYINT, n_points BIGINT, sum_vec ARRAY<DOUBLE>"
+    "member_id INT, vec_id BIGINT, label INT, dist DOUBLE, mdist DOUBLE, "
+    "kind TINYINT, n_points BIGINT, sum_vec ARRAY<DOUBLE>"
 )
 
 
@@ -315,12 +265,11 @@ def gka_reassign(
     points: DataFrame,
     centers_by_member: dict[int, dict[int, list]],
     mutation_targets: dict[int, int] | None = None,
-    emit_partials: bool = False,
 ) -> DataFrame:
     """KMO reassignment for every member in one narrow pass: per
     partition, one distance matrix per member against its own centers.
     ``centers_by_member``: {member_id: {cid: center_list}}. Returns the
-    (member, vec) assignment table (n·P rows — inherent to GKA).
+    (member, vec) assignment table (n·P kind=0 rows — inherent to GKA).
 
     ``mutation_targets`` ({member: label}, drawable before this job
     because the mutation-target draw depends only on (member, gen,
@@ -331,7 +280,7 @@ def gka_reassign(
     member has no target or the target label has no center (the Q9
     missing-center guard: caller keeps the old distance).
 
-    ``emit_partials`` additionally emits, per partition, one kind=1 row
+    Beside the assignment rows, each partition emits one kind=1 row
     per (member, new-label) holding the partial point count + vector
     sum of the fresh assignment — the same segmented sums
     ``gka_member_centers`` computes, but for free out of the V already
@@ -367,25 +316,23 @@ def gka_reassign(
                 else:
                     mdist = np.full(len(V), np.nan)
                 labels = cids[idx].astype(np.int32)
-                frame = pd.DataFrame(
-                    {
-                        "member_id": np.full(len(V), m, dtype=np.int32),
-                        "vec_id": ids,
-                        "label": labels,
-                        "dist": D[np.arange(len(V)), idx],
-                        "mdist": mdist,
-                    }
+                uniq, counts, sums = _segmented_sums(labels.astype(np.int64), V)
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "member_id": np.full(len(V), m, dtype=np.int32),
+                            "vec_id": ids,
+                            "label": labels,
+                            "dist": D[np.arange(len(V)), idx],
+                            "mdist": mdist,
+                            "kind": np.int8(0),
+                            "n_points": pd.array([None] * len(V), dtype="Int64"),
+                            "sum_vec": None,
+                        }
+                    )
                 )
-                if emit_partials:
-                    frame["kind"] = np.int8(0)
-                    frame["n_points"] = pd.array(
-                        [None] * len(V), dtype="Int64"
-                    )
-                    frame["sum_vec"] = None
-                    uniq, counts, sums = _segmented_sums(
-                        labels.astype(np.int64), V
-                    )
-                    part = pd.DataFrame(
+                frames.append(
+                    pd.DataFrame(
                         {
                             "member_id": np.full(len(uniq), m, dtype=np.int32),
                             "vec_id": pd.array([None] * len(uniq), dtype="Int64"),
@@ -397,14 +344,10 @@ def gka_reassign(
                             "sum_vec": [s.tolist() for s in sums],
                         }
                     )
-                    frames.append(frame)
-                    frames.append(part)
-                else:
-                    frames.append(frame)
+                )
             yield pd.concat(frames, ignore_index=True)
 
-    schema = GKA_ASSIGN_STATS_SCHEMA if emit_partials else GKA_ASSIGN_SCHEMA
-    return points.mapInPandas(kernel, schema)
+    return points.mapInPandas(kernel, GKA_ASSIGN_SCHEMA)
 
 
 GMM_STATS_SCHEMA = (
@@ -428,7 +371,7 @@ def gmm_soft_stats(
 
     Returns ({cid: (rsum, wx_vector)}, loglik) combined driver-side in
     collect (partition) order — same determinism envelope as
-    ``lloyd_iteration``. The hash-verified single-step surfaces
+    ``lloyd_iteration_multi``. The hash-verified single-step surfaces
     (q_ml_gmm_estep/_mstep/_loglik, operators/clustering.py) keep the
     decimal-exact expression path; this kernel is the production fit
     loop (ml/gmm.py), the SemDeDup-style oracle-path/scale-path

@@ -5,8 +5,10 @@ particles with the dataset replicated (pso.java:193,343); here the
 swarm state (positions X, velocities V, personal bests — P·k·d doubles,
 a few KB) lives in driver numpy, and each iteration runs ONE
 distributed pass over the partitioned data that evaluates ALL
-particles' objectives simultaneously (broadcast the P·k centroid table,
-argmin per (particle, point), sum per particle).
+particles' objectives simultaneously (ml/kernels.pso_objectives:
+the P·k·d swarm is broadcast, each partition computes one distance
+matrix per particle and its Σ min-dist, and the driver adds the
+P·num_partitions partial sums).
 
 Velocity/position update (R14):
 - canonical (default):       v ← w·v + c1·r1·(pbest−x) + c2·r2·(gbest−x)
@@ -32,8 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_clustering_spark.functions.detagg import DEC
-from spark_clustering_spark.functions.distance import euclidean
+from spark_clustering_spark.ml.kernels import pso_objectives
 
 PSO_METRICS_SCHEMA = "iter INT, best_objectvalue DOUBLE, iter_ms BIGINT"
 
@@ -58,17 +59,6 @@ def _vbounds(points: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     lo = np.array([r["lo"] for r in rows])
     hi = np.array([r["hi"] for r in rows])
     return lo, hi
-
-
-def _evaluate_all(
-    spark: SparkSession, points: DataFrame, X: np.ndarray
-) -> np.ndarray:
-    """One narrow kernel pass evaluating every particle's objective
-    (Σ min-dist, Q4): BLAS distance matrices per partition, P-row
-    combine (ml/kernels.py — no data-sized shuffle)."""
-    from spark_clustering_spark.ml.kernels import pso_objectives
-
-    return pso_objectives(points, X)
 
 
 def fit_pso(
@@ -106,7 +96,7 @@ def fit_pso(
         V = np.zeros((P, k, d))
         pbest = X.copy()
 
-        pbest_obj = _evaluate_all(spark, points, X)
+        pbest_obj = pso_objectives(points, X)
         g_idx = int(np.argmin(pbest_obj))
         gbest, gbest_obj = pbest[g_idx].copy(), float(pbest_obj[g_idx])
 
@@ -124,7 +114,7 @@ def fit_pso(
             V = np.clip(V, -v_max, v_max)  # R14 clamp (pso.java:142-145)
             X = X + V
 
-            obj = _evaluate_all(spark, points, X)  # R15
+            obj = pso_objectives(points, X)  # R15
             improved = obj < pbest_obj
             pbest[improved] = X[improved]
             pbest_obj[improved] = obj[improved]

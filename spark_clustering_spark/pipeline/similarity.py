@@ -2122,7 +2122,7 @@ def q_ml_ncm_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, no window over data, map-side-combined accuracy rollup.
     (The declared form uses the exploded pos-join so the oracle can
     replay the identical decimal sums; the kernel twin is
-    ml/kernels.lloyd_partial_stats.)"""
+    ml/kernels.lloyd_partials.)"""
     ve = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double_array("embedding").alias("vec")
     )

@@ -45,12 +45,10 @@ def write_replay_chunks(
     cores. Output files are byte-identical to the serial loop (same
     per-chunk plan, same single writer task per chunk); mtimes are
     stamped after ALL writes land, so completion order cannot leak
-    into arrival order. ``df`` should be persisted by the caller — the
-    max-id probe below populates the cache, so the concurrent chunk
-    jobs read cached blocks instead of racing to recompute the scan."""
-    max_id = df.agg(F.max(id_col).alias("m")).collect()[0]["m"]
-    n = int(max_id) + 1
-    chunk = max(1, n // n_chunks + (n % n_chunks > 0))
+    into arrival order. ``df`` is cached for the write and released
+    after it: the max-id probe populates the cache, so the concurrent
+    chunk jobs read cached blocks instead of racing to recompute the
+    scan (or the pipeline behind it)."""
 
     def _write_one(ci_lo: tuple[int, int]) -> str:
         ci, lo = ci_lo
@@ -67,12 +65,19 @@ def write_replay_chunks(
 
     from pyspark.util import inheritable_thread_target
 
-    jobs = list(enumerate(range(0, n, chunk)))
-    # the wrapper carries the caller's job group, local properties and
-    # tags into the pool threads; plain threads submit ungrouped jobs
-    write_one = inheritable_thread_target(df.sparkSession)(_write_one)
-    with ThreadPoolExecutor(max_workers=min(len(jobs), 8)) as pool:
-        dirs = list(pool.map(write_one, jobs))
+    df.persist()
+    try:
+        max_id = df.agg(F.max(id_col).alias("m")).collect()[0]["m"]
+        n = int(max_id) + 1
+        chunk = max(1, n // n_chunks + (n % n_chunks > 0))
+        jobs = list(enumerate(range(0, n, chunk)))
+        # the wrapper carries the caller's job group, local properties and
+        # tags into the pool threads; plain threads submit ungrouped jobs
+        write_one = inheritable_thread_target(df.sparkSession)(_write_one)
+        with ThreadPoolExecutor(max_workers=min(len(jobs), 8)) as pool:
+            dirs = list(pool.map(write_one, jobs))
+    finally:
+        df.unpersist()
     base = time.time()
     for ci, cdir in enumerate(dirs):
         for root, _, files in os.walk(cdir):
@@ -89,11 +94,7 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 8) -> str:
     shares one scratch name: a replay is read only while its stream
     drains, so the next replay may replace it."""
     out = scratch("stream_replay")
-    ev = table(spark, sf_dir, "events").persist()
-    try:
-        write_replay_chunks(ev, "event_id", out, n_chunks)
-    finally:
-        ev.unpersist()
+    write_replay_chunks(table(spark, sf_dir, "events"), "event_id", out, n_chunks)
     return out
 
 
@@ -298,13 +299,7 @@ def stream_cluster_volume(
         ).alias("ts"),
     )
     out = scratch("cluster_replay")
-    # persist: the assign pipeline would otherwise recompute once per
-    # chunk write plus once for the max-id probe (9 full jobs)
-    timed = timed.persist()
-    try:
-        write_replay_chunks(timed, "vec_id", out, n_chunks=8)
-    finally:
-        timed.unpersist()
+    write_replay_chunks(timed, "vec_id", out, n_chunks=8)
     src = (
         spark.readStream.schema("vec_id BIGINT, cluster_id BIGINT, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1)

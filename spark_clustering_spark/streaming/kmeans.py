@@ -4,10 +4,11 @@ The reference fits (kmeans.java) are batch driver loops; this is the
 same Lloyd assignment kernel served as TRUE Structured Streaming:
 the corpus replays as a vec_id-ordered file stream (the harness.py
 pattern), each micro-batch runs one map-side assignment pass against
-the current centroids (ml/kernels.lloyd_iteration — the identical
-kernel the batch fit hash-verifies through q_assign_nearest /
-q_centroid_update), and the driver folds the per-batch sufficient
-statistics into the running centers with the standard
+the current centroids (ml/kernels.lloyd_iteration_multi with one run —
+the same Lloyd kernel fit_kmeans runs its restarts through; the
+hash-verified q_assign_nearest / q_centroid_update keys run the
+DataFrame expression path instead), and the driver folds the per-batch
+sufficient statistics into the running centers with the standard
 decay-weighted mini-batch update:
 
     c ← (n_eff·c + Σ_batch x) / (n_eff + n_batch),  n_eff = decay·n
@@ -35,32 +36,15 @@ import os
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from spark_clustering_spark.io import scratch
-from spark_clustering_spark.ml.kernels import lloyd_iteration
+from spark_clustering_spark.ml.kernels import lloyd_iteration_multi
 from spark_clustering_spark.operators.clustering import points_df
+from spark_clustering_spark.streaming.harness import _drain, write_replay_chunks
 
 STREAM_KMEANS_SCHEMA = (
     "cluster_id INT, n_weight DOUBLE, n_batches INT, center ARRAY<DOUBLE>"
 )
-
-
-def replay_points_dir(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> str:
-    """Materialize (vec_id, vec) as n_chunks vec_id-ranged parquet
-    files — a deterministic arrival-order replay source (the
-    harness.py events pattern, applied to embeddings)."""
-    from spark_clustering_spark.streaming.harness import write_replay_chunks
-
-    out = scratch("stream_kmeans_replay")
-    pts = points_df(spark, sf_dir).persist()
-    try:
-        write_replay_chunks(pts, "vec_id", out, n_chunks)
-    finally:
-        pts.unpersist()
-    return out
 
 
 def fit_kmeans_stream(
@@ -73,8 +57,13 @@ def fit_kmeans_stream(
     """Run the mini-batch fit over the full replay (availableNow) and
     return one row per cluster: (cluster_id, n_weight, n_batches,
     center). Deterministic: chunks arrive in chunk order (strictly
-    increasing mtimes stamped by replay_points_dir +
+    increasing mtimes stamped by write_replay_chunks +
     maxFilesPerTrigger=1), init is the k lowest vec_ids (Q5).
+
+    The replay is (vec_id, vec) as n_chunks vec_id-ranged parquet
+    files (the harness.py events pattern, applied to embeddings).
+    A drain that times out raises: a partly folded stream is a wrong
+    fit, not a result.
 
     The fold is order-dependent — each micro-batch assigns against the
     centers as already updated by earlier batches (a sequential
@@ -83,7 +72,8 @@ def fit_kmeans_stream(
     order must be pinned. Cross-checked batch-for-batch against
     pyspark.mllib.clustering.StreamingKMeansModel.update in
     tests/test_streaming.py."""
-    replay = replay_points_dir(spark, sf_dir, n_chunks=n_chunks)
+    replay = scratch("stream_kmeans_replay")
+    write_replay_chunks(points_df(spark, sf_dir), "vec_id", replay, n_chunks)
     ckpt = scratch("stream_kmeans_ck")
     init = points_df(spark, sf_dir).orderBy("vec_id").limit(k).collect()
     centers = np.array([list(r["vec"]) for r in init], dtype=np.float64)
@@ -91,7 +81,8 @@ def fit_kmeans_stream(
     state = {"batches": 0}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        stats = lloyd_iteration(batch_df.select("vec_id", "vec"), centers)
+        pts = batch_df.select("vec_id", "vec")
+        stats = lloyd_iteration_multi(pts, {0: centers})[0]
         # MLlib StreamingKMeans semantics: the per-batch discount
         # applies to EVERY cluster, including ones this batch sends
         # no points to (their mass decays, centers stay put)
@@ -113,7 +104,11 @@ def fit_kmeans_stream(
         .option("checkpointLocation", ckpt)
         .start()
     )
-    q.awaitTermination()
+    if not _drain(q):
+        raise TimeoutError(
+            "fit_kmeans_stream: the replay did not drain; stopped after "
+            f"{state['batches']} micro-batches"
+        )
     rows = [
         (int(c), float(weights[c]), int(state["batches"]), centers[c].tolist())
         for c in range(k)

@@ -56,6 +56,22 @@ class TestKMeans:
         assert r1.history == r2.history
         assert r1.centroids == r2.centroids
 
+    def test_multi_run_pass_equals_one_run_calls(self, spark, points):
+        """The shared Lloyd kernel's runs are independent: a two-run
+        pass returns, per run, exactly what a one-run call returns
+        (the property batch restarts rely on when they share one
+        assignment pass, and the streaming fit on when it runs one)."""
+        import numpy as np
+
+        from spark_clustering_spark.ml.kernels import lloyd_iteration_multi
+
+        vecs = [r["vec"] for r in points.orderBy("vec_id").limit(7).collect()]
+        a, b = np.array(vecs[:4]), np.array(vecs[4:])
+        both = lloyd_iteration_multi(points, {0: a, 1: b})
+        assert both[0] == lloyd_iteration_multi(points, {0: a})[0]
+        assert both[1] == lloyd_iteration_multi(points, {1: b})[1]
+        assert [s["cluster_id"] for s in both[1]] == [0, 1, 2]
+
     def test_failed_fit_releases_its_cache(self, spark, monkeypatch):
         """A fit whose kernel raises must not leave its input cached for
         the rest of the session."""

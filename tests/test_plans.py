@@ -96,21 +96,20 @@ def test_assignment_is_broadcast_no_data_shuffle_before_agg(spark):
 
 
 def test_lloyd_kernel_shuffles_only_stats(spark):
-    """The fit-loop kernel's shuffle payload is k rows per partition,
-    independent of data size."""
+    """The fit-loop kernel's output is at most k rows per partition and
+    center set, independent of data size."""
     import numpy as np
 
-    from spark_clustering_spark.ml.kernels import lloyd_partial_stats
+    from spark_clustering_spark.ml.kernels import lloyd_partials
     from spark_clustering_spark.operators.clustering import points_df
 
     pts = points_df(spark, SF_SMALL)
-    centers = np.array(
-        [r["vec"] for r in pts.orderBy("vec_id").limit(4).collect()]
-    )
-    partial = lloyd_partial_stats(pts, centers)
-    # partial stats are bounded by k * num_partitions regardless of n
+    vecs = [r["vec"] for r in pts.orderBy("vec_id").limit(8).collect()]
+    stack = {0: np.array(vecs[:4]), 1: np.array(vecs[4:])}
+    partial = lloyd_partials(pts, stack)
+    # partial stats are bounded by runs * k * num_partitions regardless of n
     n_partitions = pts.rdd.getNumPartitions()
-    assert partial.count() <= 4 * max(n_partitions, 1)
+    assert partial.count() <= 2 * 4 * max(n_partitions, 1)
 
 
 def test_dedup_exact_shuffles_digest_not_text(spark, qs):

@@ -233,6 +233,24 @@ def test_stream_kmeans_matches_numpy_replay(spark):
         assert np.allclose(np.array(list(g.center)), centers[c], atol=1e-8)
 
 
+def test_stream_kmeans_raises_when_its_drain_times_out(spark, monkeypatch):
+    """A stream fit whose replay does not drain is a wrong fit, not a
+    result: fit_kmeans_stream must raise, and the harness drain's
+    timeout path must leave no query running."""
+    import pytest
+
+    from spark_clustering_spark.streaming import harness, kmeans
+
+    def timed_out(q, timeout=300):
+        harness._drain(q, timeout=0.001)  # the real stop path
+        return False
+
+    monkeypatch.setattr(kmeans, "_drain", timed_out)
+    with pytest.raises(TimeoutError, match="did not drain"):
+        kmeans.fit_kmeans_stream(spark, SF_SMALL, k=4, n_chunks=3)
+    assert not spark.streams.active
+
+
 def test_stream_upsert_matches_batch_collapse(spark):
     from pyspark.sql import functions as F
 
@@ -277,7 +295,7 @@ def test_replay_chunk_writes_keep_callers_job_group(spark, tmp_path):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
-    df = spark.range(0, 700).withColumnRenamed("id", "row_id").persist()
+    df = spark.range(0, 700).withColumnRenamed("id", "row_id")
     bus.waitUntilEmpty()
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("replay_chunks", "write_replay_chunks job-group test")
@@ -285,7 +303,6 @@ def test_replay_chunk_writes_keep_callers_job_group(spark, tmp_path):
         write_replay_chunks(df, "row_id", str(tmp_path / "replay"), 7)
     finally:
         sc._jsc.clearJobGroup()
-        df.unpersist()
     bus.waitUntilEmpty()
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
     assert len(tracker.getJobIdsForGroup("replay_chunks")) >= 8

@@ -1,9 +1,10 @@
-"""sf1 invariant run for the fit family (VERDICT r7 task 7).
+"""Invariant gate for the fit family (VERDICT r7 task 7).
 
 The 9 rows-only ``fit_*`` surfaces carry numpy replays, golden traces
-and MLlib cross-checks at fixture scale, and sf1 bench walls — this
-tool closes the remaining gap by asserting the BEHAVIORAL invariants
-on the real 10x corpus (testdata_sf1 embeddings, n=20000, d=64):
+and MLlib cross-checks at fixture scale — this tool closes the
+remaining gap by asserting the BEHAVIORAL invariants on a full
+corpus (default ``io.DEFAULT_SF_DIR``, i.e. $SPARK_GRAFT_SF_DIR or
+sf0.1):
 
 - monotone objective: best_objectvalue non-increasing over the run
   (kmeans/gka/pso families), loglik non-decreasing (EM guarantee, gmm);
@@ -30,6 +31,8 @@ from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
+
+from spark_clustering_spark.io import DEFAULT_SF_DIR  # noqa: E402
 
 K = 8
 TIMING_COLS = {"iter_ms", "gen_ms"}
@@ -138,7 +141,7 @@ def check_key(name, cols, rows, n_corpus):
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=str(_REPO / "testdata_sf1"))
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
