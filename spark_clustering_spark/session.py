@@ -13,6 +13,19 @@ on ``local[*]``:
   this would be set to ~2-3x total executor cores (AQE coalesces down).
   Query code reads the width only through ``io.shuffle_width``, which
   applies the same default when a caller's session leaves it unset.
+- Python workers run ``spark_clustering_spark.worker_daemon``
+  (``spark.python.daemon.module``) instead of ``pyspark.daemon``: on
+  Python < 3.13 pyspark's per-task ``importlib.invalidate_caches()``
+  re-reads the whole central directory of ``pyspark.zip`` and the py4j
+  zip, ~0.1 s before every task's kernel; the daemon skips the re-read
+  of an archive that has not changed. Delete the module and this conf
+  once the workers run Python 3.13, whose stock call is lazy.
+- Workers start that daemon (and every Arrow kernel here) by importing
+  this package, so the package's parent directory is appended to
+  ``spark.executorEnv.PYTHONPATH``: they import it from wherever the
+  driver did, whatever the cwd or ``PYTHONPATH``. Sessions built
+  without ``get_spark`` keep the stock daemon (the conf is static per
+  SparkContext) and still need the package on the workers' path.
 """
 
 from __future__ import annotations
@@ -77,8 +90,14 @@ def get_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.python.daemon.module", "spark_clustering_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    engine_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), engine_root) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # codegen.cache.maxEntries is a STATIC conf: if a SparkSession
