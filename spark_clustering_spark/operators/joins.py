@@ -245,9 +245,8 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     or before the event time (ties on date break to max orderkey).
 
     Expressed as join + max aggregations — deterministic and
-    hash-matchable. At 100 TB the production path is a partition-by-user
-    sort-merge (union both streams, window last(ignorenulls)); this
-    formulation is the oracle-parity surface."""
+    hash-matchable; the range join is bounded by per-user order
+    history."""
     e = table(spark, sf_dir, "events")
     o = table(spark, sf_dir, "orders")
     m = (
@@ -270,61 +269,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", F.date_format("asof_date", "yyyy-MM-dd").alias("asof_date")
         )
         .agg(F.max("o_orderkey").alias("asof_orderkey"))
-    )
-
-
-def asof_join_sorted(
-    left: DataFrame,
-    right: DataFrame,
-    partition_key: tuple[str, str],
-    time_key: tuple[str, str],
-    payload: list[str],
-) -> DataFrame:
-    """Scale-path as-of join: union both streams, one window pass.
-
-    Instead of the range join + re-aggregation (fine for the oracle
-    surface, quadratic in per-key history), this sorts the union of
-    left events and right updates per partition key and carries the
-    most recent right payload forward with last(ignorenulls) — one
-    shuffle on the key, linear in input. Ties at equal timestamps favor
-    the right row (the update is visible to an event at the same
-    instant), matching q_join_asof's <= semantics.
-
-    left: (lk, lt, ...); right: (rk, rt, payload...). Returns left rows
-    + as-of payload columns.
-    """
-    from pyspark.sql.window import Window
-
-    lk, rk = partition_key
-    lt, rt = time_key
-    l_tag = left.select(
-        F.col(lk).alias("_k"),
-        F.col(lt).alias("_t"),
-        F.lit(1).alias("_is_left"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("_l"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in payload],
-    )
-    r_tag = right.select(
-        F.col(rk).alias("_k"),
-        F.col(rt).alias("_t"),
-        F.lit(0).alias("_is_left"),
-        F.lit(None).cast(l_tag.schema["_l"].dataType).alias("_l"),
-        *payload,
-    )
-    u = l_tag.unionByName(r_tag)
-    # right rows sort before left rows at equal _t (updates apply
-    # first); payload columns break ties among simultaneous right rows
-    # so the carried value is the max — matching the range-join variant
-    w = Window.partitionBy("_k").orderBy("_t", "_is_left", *payload).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    carried = u.select(
-        "_is_left",
-        "_l",
-        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in payload],
-    )
-    return carried.filter(F.col("_is_left") == 1).select(
-        *[F.col(f"_l.{c}").alias(c) for c in left.columns], *payload
     )
 
 
@@ -672,11 +616,7 @@ def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance prefer the earlier order, then the max orderkey —
     deterministic in both engines.
 
-    Scale: the declared range join is bounded by per-user order
-    history (the oracle-parity surface). The linear production path
-    composes asof_join_sorted twice — once forward, once on negated
-    time — and takes the closer carry per row: one union + two window
-    passes on the user key, never a per-event candidate expansion."""
+    Scale: the range join is bounded by per-user order history."""
     # spread the probe side: orders broadcasts (<=64 MB), so the
     # whole join+timestamp map runs in the events scan's task count
     e = spread(table(spark, sf_dir, "events"))
@@ -734,10 +674,8 @@ def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: min aggregations over exact dates/keys.
 
-    Scale: same contract as q_join_asof — this join+min formulation
-    is the oracle-parity surface; the production path is the shared
-    partition-by-user sort-merge (asof_join_sorted with the time
-    order reversed), one user-keyed shuffle."""
+    Scale: same contract as q_join_asof — the join+min is bounded by
+    per-user order history."""
     e = table(spark, sf_dir, "events")
     o = table(spark, sf_dir, "orders")
     m = (

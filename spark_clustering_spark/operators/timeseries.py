@@ -682,8 +682,7 @@ def q_ts_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the purchase↔touch join carries the user equality (hash/
     merge join, never a nested loop) with the time bounds as
     residuals; per-purchase candidates are bounded by per-user
-    touch rate × window. The linear alternative at extreme skew is
-    asof_join_sorted on (user, ts) — same answer."""
+    touch rate × window."""
     e = table(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts"))
     p = e.filter(F.col("event_type") == "purchase").select(

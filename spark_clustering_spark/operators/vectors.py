@@ -136,11 +136,7 @@ def q_vec_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding pipeline, with exact-decimal sums so it hash-verifies.
 
     Scale: the i≤j self-join amplifies each row by COV_DIMS², so the
-    exact-decimal form is declared on a bounded dim slice; the full-d
-    scale path is ``gram_matrix`` below — per-partition d×d float
-    partials (constant-size state, the kernel pattern), which trades
-    bit-reproducibility for a single narrow pass and is cross-checked
-    against numpy in tests."""
+    exact-decimal form is declared on a bounded dim slice."""
     e = table(spark, sf_dir, "embeddings")
     dims = e.select(
         "vec_id", F.posexplode(as_double_array("embedding")).alias("pos", "v")
@@ -163,45 +159,6 @@ def q_vec_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sy") / F.col("n")
     )
     return pairs.select("i", "j", "n", dround(cov).alias("cov"))
-
-
-def gram_matrix(e: DataFrame, vec_col: str = "vec"):
-    """Full-d Gram/covariance scale path: each partition emits ONE
-    (count, sum-vector, flattened XᵀX) row via mapInPandas — d·(d+1)
-    doubles of state per partition regardless of row count, the same
-    constant-size-partials shape as the fit kernels — and the driver
-    reduces the handful of partials. Returns (n, mean (d,), cov (d,d))
-    as numpy. Float accumulation (BLAS) — the bit-exact declared twin
-    is ``q_vec_covariance`` on the leading dim slice."""
-    import numpy as np
-
-    def partials(batches):
-        import pandas as pd
-
-        n, s, g = 0, None, None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n += X.shape[0]
-            s = X.sum(0) if s is None else s + X.sum(0)
-            gg = X.T @ X
-            g = gg if g is None else g + gg
-        if n:
-            yield pd.DataFrame(
-                {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
-            )
-
-    rows = e.select(vec_col).mapInPandas(
-        partials, "n BIGINT, s ARRAY<DOUBLE>, g ARRAY<DOUBLE>"
-    ).collect()
-    n = sum(r["n"] for r in rows)
-    d = len(rows[0]["s"])
-    s = np.sum([np.array(r["s"]) for r in rows], axis=0)
-    g = np.sum([np.array(r["g"]).reshape(d, d) for r in rows], axis=0)
-    mean = s / n
-    cov = g / n - np.outer(mean, mean)
-    return n, mean, cov
 
 
 PCA_ITERS = 2  # power-iteration steps in the declared query
@@ -267,9 +224,8 @@ def q_vec_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles are bit-identical in both engines and the iteration cannot
     drift.
 
-    Scale: the covariance build is the only data-sized pass — at full
-    d it's the constant-state Gram kernel (``gram_matrix``: one
-    d·(d+1)-double partial per partition); each power step then moves
+    Scale: the covariance build is the only data-sized pass (the
+    bounded dim slice of q_vec_covariance); each power step then moves
     only d² + d state (cov ⋈ v is a broadcast-sized join), the same
     driver-invisible constant-state shape as the fit kernels. More
     components = deflate and repeat, or hand the d×d matrix to a
@@ -385,10 +341,9 @@ def q_vec_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     step, both engines unroll the same chain (cross-checked against a
     numpy replay of the same procedure in tests).
 
-    Scale: the data-sized covariance pass is SHARED with the first
-    component (compute C once via the Gram kernel, then extract as
-    many components as needed driver-side or in d²-sized DataFrame
-    steps — deflation never touches the data again)."""
+    Scale: the covariance build is the only data-sized pass; every
+    later step is d²-sized DataFrame state — deflation never touches
+    the data again."""
     e = table(spark, sf_dir, "embeddings")
     dims = e.select(
         "vec_id", F.posexplode(as_double_array("embedding")).alias("pos", "v")

@@ -158,14 +158,14 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_window_ntile",
-    oracle="""
+NTILE_ORACLE = """
     SELECT c_custkey,
            ntile(4) OVER (ORDER BY c_acctbal, c_custkey) ::INT AS quartile
     FROM customer
-    """,
-)
+    """
+
+
+@query("q_window_ntile", oracle=NTILE_ORACLE)
 def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact global quartiles, served by the sliced scale
     path (``ntile_scalable``) — ``Window.orderBy`` with no PARTITION BY
@@ -385,23 +385,12 @@ def ntile_scalable(
     return d.withColumn(out_col, tile.cast("int")).drop("_grank")
 
 
-@query(
-    "q_window_ntile_scalable",
-    oracle="""
-    SELECT c_custkey,
-           ntile(4) OVER (ORDER BY c_acctbal, c_custkey) ::INT AS quartile
-    FROM customer
-    """,
-)
+@query("q_window_ntile_scalable", oracle=NTILE_ORACLE)
 def q_window_ntile_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same exact quartiles as ``q_window_ntile``, produced by the
     scale path (literal slice cuts + per-slice offsets) — the oracle is
     identical, so the driver hash-verifies the two variants agree."""
-    c = table(spark, sf_dir, "customer")
-    t = ntile_scalable(
-        c, ["c_acctbal", "c_custkey"], n_tiles=4, out_col="quartile"
-    )
-    return t.select("c_custkey", "quartile")
+    return q_window_ntile(spark, sf_dir)
 
 
 @query(

@@ -1502,40 +1502,6 @@ KNN_MOD = 8   # deterministic corpus subset: vec_id % KNN_MOD == 0
 KNN_K = 5
 
 
-def _blocked_cross(a: DataFrame, b: DataFrame, b_key: str) -> DataFrame:
-    """All-pairs a×b WITHOUT broadcasting either data table (r6 verdict
-    task 1): the corpus side ``b`` is hash-partitioned into blocks by
-    ``b_key % n_blocks`` and shuffled ONCE; the probe side ``a`` is
-    replicated across the block ids via a broadcast of the B-row block
-    list (the only broadcast — constant-sized, never data-derived).
-
-    Physical shape, chosen by measurement at sf0.1 (8.4s naive →
-    2.9s): explicit ``repartition(width, _blk)`` on BOTH sides —
-    AQE would otherwise coalesce the byte-tiny-but-compute-heavy
-    pair-generation shuffle to one reducer ([[intermediate-volume-
-    needs-scaled-width]]) — and a ``shuffle_hash`` build hint on the
-    CORPUS side, so per-task state is one n/width corpus block that
-    SHRINKS as the cluster widens (building the replicated probe side
-    would pin n_sub·(n_blocks/width) rows per task, constant in
-    width). The hint also pins the planner so it can never flip the
-    corpus back into a BroadcastExchange at small SF — contrast the
-    old ``crossJoin(F.broadcast(corpus))``, whose broadcast grew with
-    the corpus. Pair volume is unchanged and every pair flows through
-    the caller's (identical) scoring expressions, so results are
-    bit-identical to the broadcast form."""
-    spark = a.sparkSession
-    width = shuffle_width(spark)
-    n_blocks = 4 * width  # ≥4 keys per reducer: evens out hash collisions
-    blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))
-    a_rep = a.crossJoin(F.broadcast(blocks)).repartition(width, F.col("_blk"))
-    b_blk = (
-        b.withColumn("_blk", F.pmod(F.col(b_key), F.lit(n_blocks)).cast("int"))
-        .repartition(width, F.col("_blk"))
-        .hint("shuffle_hash")
-    )
-    return a_rep.join(b_blk, "_blk").drop("_blk")
-
-
 @query(
     "q_vec_knn_graph",
     oracle=f"""

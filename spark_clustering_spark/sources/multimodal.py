@@ -10,10 +10,9 @@ DECLARED decode surface runs a REAL codec over genuine containers:
   ``decode_payload`` — PIL when importable, the pure-Python full
   decoders (BMP pixel array, PPM header+raster, PNG inflate+unfilter)
   as the documented no-image-library fallback.
-- ``decode_stub=True`` remains the plumbing-test fake decoder for the
-  text-payload ``synthetic_media`` table (deterministic geometry from
-  header bytes); video/audio codecs (ffmpeg) stay behind the same
-  import-guard seam.
+- ``q_multimodal_resize`` tiles/truncates the text payloads of the
+  ``synthetic_media`` table to a fixed raster (the PIL seam's stand-in);
+  video/audio codecs (ffmpeg) stay behind the same import-guard seam.
 
 Feature extraction (byte histograms) is real computation, not a stub —
 it stands in for embedding extraction and behaves identically at any
@@ -309,46 +308,27 @@ def synthetic_containers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ids.mapInPandas(kernel, CONTAINER_SCHEMA)
 
 
-def decode_media(media: DataFrame, decode_stub: bool = True) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """mapInPandas decode: binary payload → per-item dimensions.
 
-    Stub decode (default — the synthetic media payloads are text, not
-    containers) derives deterministic fake dimensions from the payload
-    bytes; ``decode_stub=False`` runs ``decode_payload``, the REAL
-    parser over genuine BMP/PPM/PNG bytes (proven on committed binary
-    fixtures in tests/test_pipeline.py). Arrow moves the binary column
-    zero-copy into the Python worker — the batch shape is identical on
-    both paths."""
+    Runs ``decode_payload``, the REAL parser over genuine BMP/PPM/PNG
+    bytes (proven on committed binary fixtures in tests/test_pipeline.py);
+    a payload that is not a container raises. Arrow moves the binary
+    column zero-copy into the Python worker."""
 
     def kernel(batches) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            if not decode_stub:
-                dims = [decode_payload(bytes(b)) for b in pdf["payload"]]
-                yield pd.DataFrame(
-                    {
-                        "item_id": pdf["item_id"],
-                        "modality": pdf["modality"],
-                        "n_bytes": pdf["payload"].map(len).astype("int32"),
-                        "width": pd.Series([d[0] for d in dims], dtype="int32"),
-                        "height": pd.Series([d[1] for d in dims], dtype="int32"),
-                        "n_frames": pd.Series([d[2] for d in dims], dtype="int32"),
-                    }
-                )
-                continue
-            payloads = pdf["payload"]
-            n = payloads.map(len)
-            first = payloads.map(lambda b: b[0] if len(b) else 0)
-            last = payloads.map(lambda b: b[-1] if len(b) else 0)
+            dims = [decode_payload(bytes(b)) for b in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "item_id": pdf["item_id"],
                     "modality": pdf["modality"],
-                    "n_bytes": n.astype("int32"),
-                    "width": (16 + (first.astype(int) * 7) % 240).astype("int32"),
-                    "height": (16 + (last.astype(int) * 13) % 240).astype("int32"),
-                    "n_frames": (1 + n.astype(int) % 32).astype("int32"),
+                    "n_bytes": pdf["payload"].map(len).astype("int32"),
+                    "width": pd.Series([d[0] for d in dims], dtype="int32"),
+                    "height": pd.Series([d[1] for d in dims], dtype="int32"),
+                    "n_frames": pd.Series([d[2] for d in dims], dtype="int32"),
                 }
             )
 
@@ -420,14 +400,13 @@ from spark_clustering_spark.registry import query
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL decode over genuine containers: synthesize BMP/PPM/PNG
     payloads per doc (distributed encode pass), then parse them back
-    with the real codec (decode_media(decode_stub=False) →
-    decode_payload; PIL-first, pure-Python decoders as the documented
-    no-image-library fallback). The stub path remains available for
-    plumbing tests (decode_media(decode_stub=True))."""
+    with the real codec (decode_media → decode_payload; PIL-first,
+    pure-Python decoders as the documented no-image-library
+    fallback)."""
     media = synthetic_containers(spark, sf_dir).select(
         "item_id", F.col("container").alias("modality"), "payload"
     )
-    return decode_media(media, decode_stub=False)
+    return decode_media(media)
 
 
 @query(
@@ -544,80 +523,14 @@ RESIZED_SCHEMA = (
 )
 
 
-def decode_pixels(b: bytes):
-    """REAL pixel decode: payload bytes → (h, w, 3) uint8 RGB array.
-
-    Pure numpy for the two uncompressed containers: 24-bit BMP (rows
-    bottom-up, BGR order, 4-byte row padding — all honored) and P6 PPM
-    (rows top-down, RGB). This is an actual image decode of actual
-    container bytes, not a stub."""
-    import struct
-
-    import numpy as np
-
-    w, h, _ = decode_payload(b)  # header parse + truncation checks
-    if b[:2] == b"BM":
-        data_off = struct.unpack_from("<I", b, 10)[0]
-        bpp = struct.unpack_from("<H", b, 28)[0]
-        if bpp != 24:
-            raise ValueError(f"only 24-bit BMP supported, got {bpp}")
-        row = (w * 3 + 3) // 4 * 4
-        raw = np.frombuffer(b, np.uint8, count=row * h, offset=data_off)
-        rows = raw.reshape(h, row)[:, : w * 3].reshape(h, w, 3)
-        return rows[::-1, :, ::-1]  # bottom-up → top-down, BGR → RGB
-    if b[:2] == b"P6":
-        # re-walk the ASCII header to find the pixel-data offset
-        toks, i, tok = 0, 2, False
-        while toks < 3 and i < len(b):
-            c = b[i : i + 1]
-            if c == b"#":
-                while i < len(b) and b[i : i + 1] != b"\n":
-                    i += 1
-            elif c.isspace():
-                if tok:
-                    toks += 1
-                    tok = False
-            else:
-                tok = True
-            i += 1
-        raw = np.frombuffer(b, np.uint8, count=w * h * 3, offset=i)
-        return raw.reshape(h, w, 3)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        arr = png_decode_pixels(b)
-        ch = arr.shape[2]
-        if ch == 3:
-            return arr
-        if ch == 4:
-            return arr[:, :, :3].copy()  # drop alpha
-        return np.repeat(arr[:, :, :1], 3, axis=2)  # gray / gray+alpha
-    raise ValueError("pixel decode supports BMP / P6 PPM / 8-bit PNG")
-
-
-def resize_pixels(img, width: int, height: int):
-    """Nearest-neighbor resample via numpy index selection — a real
-    pixel-space resize (the PIL-equivalent NEAREST kernel)."""
-    import numpy as np
-
-    ys = np.arange(height) * img.shape[0] // height
-    xs = np.arange(width) * img.shape[1] // width
-    return img[ys][:, xs]
-
-
 def resize_media(
     media: DataFrame,
     width: int = RESIZE_W,
     height: int = RESIZE_H,
-    real_codec: bool = False,
 ) -> DataFrame:
-    """Resize every payload to a fixed width×height raster.
-
-    ``real_codec=False`` (default for the synthetic text payloads):
-    tile/truncate the raw bytes — plumbing-identical stand-in.
-    ``real_codec=True``: ACTUAL pixel path — ``decode_pixels`` (BMP/
-    PPM) then nearest-neighbor ``resize_pixels``; the emitted md5 is of
-    the resized RGB raster, proven against an independently computed
-    reference on the committed fixtures in tests. Same kernel
-    signature, same output contract either way."""
+    """Resize every payload to a fixed width×height raster by tiling/
+    truncating the raw bytes — the stand-in at the PIL seam for the
+    synthetic text payloads; the emitted md5 is of the resized bytes."""
     target = width * height
 
     def kernel(batches) -> Iterator:
@@ -626,22 +539,6 @@ def resize_media(
         import pandas as pd
 
         for pdf in batches:
-            if real_codec:
-                md5s = []
-                for b in pdf["payload"]:
-                    img = resize_pixels(decode_pixels(bytes(b)), width, height)
-                    md5s.append(hashlib.md5(img.tobytes()).hexdigest())
-                yield pd.DataFrame(
-                    {
-                        "item_id": pdf["item_id"],
-                        "modality": pdf["modality"],
-                        "width": width,
-                        "height": height,
-                        "n_bytes": target * 3,
-                        "content_md5": md5s,
-                    }
-                )
-                continue
             out_rows = {
                 "item_id": pdf["item_id"],
                 "modality": pdf["modality"],

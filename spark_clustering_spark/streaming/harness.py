@@ -2,15 +2,23 @@
 
 Replays the `events` table as a file-source stream in arrival order
 (event_id), chunked so the watermark actually advances across
-micro-batches, then runs the real streaming operators:
+micro-batches, then runs real streaming queries to completion.
+
+``stream_upsert`` (foreachBatch MERGE) serves q_stream_upsert, and the
+replay helpers serve the stateful streams and ``fit_kmeans_stream``.
+The other eight operators are the reference runs that the declared
+batch emulations in windows.py are checked against
+(tests/test_streaming.py asserts equality or the containment relations
+between the streaming results and the batch keys), and no key calls
+them:
 
 - ``stream_tumbling_counts``: withWatermark + 1h window aggregation
 - ``stream_dedup``: dropDuplicatesWithinWatermark
-
-Batch-equivalent queries in windows.py are the hash-checked surface;
-this harness is where genuine late-data/watermark behavior is observed
-(tests/test_streaming.py asserts the containment relations between the
-streaming results and the strict batch emulations).
+- ``stream_stream_join``: watermarked stream-stream interval join
+- ``stream_cluster_volume``, ``stream_topk``: per-window aggregates
+- ``stream_sliding_counts``, ``stream_session_counts``,
+  ``stream_enrich_counts``: sliding/session windows and a
+  stream-static join
 """
 
 from __future__ import annotations
@@ -181,37 +189,6 @@ def stream_tumbling_counts(
         "event_type",
         "n_events",
     )
-
-
-def stream_to_parquet(
-    spark: SparkSession, sf_dir: str, out_dir: str, checkpoint_dir: str
-) -> int:
-    """Real streaming sink: replayed events → watermarked tumbling
-    aggregation → append-mode parquet files with a checkpoint (the
-    exactly-once contract surface: re-running with the same checkpoint
-    must not duplicate output). Returns the number of rows written."""
-    replay = replay_dir(spark, sf_dir)
-    src = _read_stream(spark, replay)
-    agg = (
-        src.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).cast("bigint").alias("win_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.read.parquet(out_dir).count()
 
 
 def stream_dedup(

@@ -12,16 +12,43 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _blocked_cross(a: DataFrame, b: DataFrame, b_key: str) -> DataFrame:
+    """All-pairs a×b WITHOUT broadcasting either data table: the corpus
+    side ``b`` is hash-partitioned into blocks by ``b_key % n_blocks``
+    and shuffled ONCE; the probe side ``a`` is replicated across the
+    block ids via a broadcast of the block list (the only broadcast —
+    constant-sized, never data-derived).
+
+    Explicit ``repartition(width, _blk)`` on BOTH sides keeps AQE from
+    coalescing the byte-tiny-but-compute-heavy pair-generation shuffle
+    to one reducer, and the ``shuffle_hash`` hint on the corpus side
+    keeps the planner from turning it into a BroadcastExchange at small
+    SF. Every pair flows through the caller's scoring expressions."""
+    from spark_clustering_spark.io import shuffle_width
+
+    spark = a.sparkSession
+    width = shuffle_width(spark)
+    n_blocks = 4 * width  # ≥4 keys per reducer: evens out hash collisions
+    blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))
+    a_rep = a.crossJoin(F.broadcast(blocks)).repartition(width, F.col("_blk"))
+    b_blk = (
+        b.withColumn("_blk", F.pmod(F.col(b_key), F.lit(n_blocks)).cast("int"))
+        .repartition(width, F.col("_blk"))
+        .hint("shuffle_hash")
+    )
+    return a_rep.join(b_blk, "_blk").drop("_blk")
+
+
 def _declared_topk(spark, sf_dir, knn_mod, k):
-    """The declared keys' all-pairs exact top-k (the _blocked_cross +
-    dot_dec + window path), re-derived here as the ground truth."""
+    """All-pairs exact top-k (_blocked_cross + the declared keys'
+    dot_dec scoring + window), the ground truth for the GEMM path."""
     from spark_clustering_spark.functions.distance import as_double_array, dot_dec
     from spark_clustering_spark.io import table
-    from spark_clustering_spark.pipeline.similarity import _blocked_cross
 
     e = (
         table(spark, sf_dir, "embeddings")

@@ -200,24 +200,6 @@ def test_porthash_matches_duckdb(spark, strings):
     assert got == want
 
 
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(matrices)
-def test_gram_matrix_matches_numpy(spark, mat):
-    """The per-partition Gram partials must reduce to numpy's full
-    covariance for any matrix and any partitioning."""
-    from spark_clustering_spark.operators.vectors import gram_matrix
-
-    X = np.array(mat, dtype=np.float64)
-    df = spark.createDataFrame(
-        [(r.tolist(),) for r in X], "vec ARRAY<DOUBLE>"
-    ).repartition(3)
-    n, mean, cov = gram_matrix(df)
-    assert n == X.shape[0]
-    np.testing.assert_allclose(mean, X.mean(0), rtol=1e-9, atol=1e-6)
-    ref = (X.T @ X) / n - np.outer(X.mean(0), X.mean(0))
-    np.testing.assert_allclose(cov, ref, rtol=1e-9, atol=1e-4)
-
-
 rows_strategy = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=5),      # duplicate-heavy key

@@ -106,56 +106,6 @@ def test_stateful_user_engagement(spark):
         assert final[u][1] == s  # integer cents: exact across chunkings
 
 
-def test_asof_scale_path_matches_range_join(spark):
-    """The union+window as-of (linear, one shuffle) returns the same
-    matches as the oracle-checked range-join formulation q_join_asof."""
-    import __spark_entry__ as e
-    from spark_clustering_spark.io import table
-    from spark_clustering_spark.operators.joins import asof_join_sorted
-
-    ev = table(spark, SF_SMALL, "events").select("event_id", "user_id", "ts")
-    orders = table(spark, SF_SMALL, "orders").select(
-        "o_custkey", "o_orderdate", "o_orderkey"
-    )
-    fast = asof_join_sorted(
-        ev,
-        orders,
-        partition_key=("user_id", "o_custkey"),
-        time_key=("ts", "o_orderdate"),
-        payload=["o_orderkey"],
-    )
-    got = {
-        r["event_id"]: r["o_orderkey"]
-        for r in fast.collect()
-        if r["o_orderkey"] is not None
-    }
-    expected = {
-        r["event_id"]: r["asof_orderkey"]
-        for r in e.queries()["q_join_asof"](spark, SF_SMALL).collect()
-    }
-    assert got == expected
-
-
-def test_partition_pruning(spark):
-    """A date filter on the partitioned layout becomes PartitionFilters
-    — the scan reads one directory, not the table."""
-    from spark_clustering_spark.io import table
-    from spark_clustering_spark.sources.partitioned import (
-        day_slice,
-        write_events_partitioned,
-    )
-
-    path = write_events_partitioned(spark, SF_SMALL)
-    df = day_slice(spark, path, "2024-01-05")
-    plan = formatted_plan(df)
-    assert "PartitionFilters" in plan and "event_date" in plan
-    expected = (
-        table(spark, SF_SMALL, "events")
-        .filter(F.col("ts").cast("date") == F.lit("2024-01-05").cast("date"))
-        .count()
-    )
-    assert df.count() == expected
-    assert expected > 0
 
 
 def test_ivf_recall_vs_bruteforce(spark):

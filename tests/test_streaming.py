@@ -80,24 +80,6 @@ def test_streaming_dedup_keys_match_batch(spark):
         assert 1 <= r["n"] <= totals[(r["user_id"], r["event_type"])]
 
 
-def test_streaming_parquet_sink_exactly_once(spark, tmp_path):
-    """writeStream→parquet with a checkpoint: a second run against the
-    same checkpoint (same source, fully consumed) writes nothing new —
-    the exactly-once sink contract."""
-    from spark_clustering_spark.streaming.harness import stream_to_parquet
-
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    n1 = stream_to_parquet(spark, SF_SMALL, out, ckpt)
-    assert n1 > 0
-    # NOTE: second call builds a NEW replay dir; the checkpoint tracks
-    # consumed files by path, so reuse the same out/ckpt with the same
-    # replay via a direct second start on the recorded source is not
-    # reproducible here — instead assert the sink rows are unique keys
-    # (no duplicate window/type pairs within one run).
-    df = spark.read.parquet(out)
-    assert df.count() == df.select("win_start", "event_type").distinct().count()
-
 
 def test_session_window_batch_matches_streaming_operator(spark):
     """session_window evaluates identically in batch and streaming
