@@ -20,6 +20,10 @@ restarts and the streaming fit. PSO's ``pso_objectives`` needs only
 the min-distance sum per particle, and GKA's per-point kernel must
 emit n·P label rows, so both keep their own pass.
 
+The engine's GEMM pair scans (near-dup, SemDeDup, exact kNN) share one
+tile rule (``gemm_tile``) and the near-dup and SemDeDup scans share one
+pair kernel (``cosine_pairs``); only how rows reach a task differs.
+
 Determinism: identical data layout ⇒ identical float partial-sum order
 ⇒ bitwise-reproducible runs (asserted in tests). Cross-layout runs
 agree to float tolerance — the hash-matched surface remains the
@@ -28,6 +32,7 @@ expression path.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -421,3 +426,62 @@ def gmm_soft_stats(
         stats[cid] = (float(rs), wx)
         loglik += float(llp)
     return stats, loglik
+
+
+# Per-task byte budget for a GEMM score tile (rows_a x rows_b doubles).
+# 8 MiB keeps the whole working set (the tile + the A/B slabs) well
+# under typical executor task memory while still amortizing the Arrow
+# batch overhead.
+GEMM_TILE_BYTES = 8 << 20
+
+
+def gemm_tile(d: int) -> int:
+    """Rows per side of a GEMM tile over d-dim vectors: cap² score
+    doubles ≤ GEMM_TILE_BYTES and a cap×d input slab ≤
+    GEMM_TILE_BYTES/4, so per-task memory is constant at any corpus
+    size and the task count grows linearly with the pair count."""
+    elems = GEMM_TILE_BYTES // 8
+    return max(min(math.isqrt(elems), elems // max(4 * d, 1)), 1)
+
+
+def unit_rows(vecs) -> np.ndarray:
+    """The vectors of an array<double> column as a float64 matrix with
+    unit-norm rows (a zero row stays zero)."""
+    X = np.array(list(vecs), dtype=np.float64)
+    nrm = np.linalg.norm(X, axis=1)
+    nrm[nrm == 0.0] = 1.0
+    return X / nrm[:, None]
+
+
+def cosine_pairs(
+    ids_a: np.ndarray,
+    A: np.ndarray,
+    ids_b: np.ndarray,
+    B: np.ndarray,
+    threshold: float,
+    diag: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(min id, max id, score) arrays for every row pair of A × B whose
+    dot product is ≥ ``threshold``, scored in ``gemm_tile``² tiles.
+
+    ``diag``: A and B start at the same row of one matrix (B may run
+    further). Tiles below the diagonal are then skipped and a diagonal
+    tile keeps its upper triangle by row index, so each unordered pair
+    is scored once. Any other tile keeps every pair of distinct ids."""
+    cap = gemm_tile(A.shape[1])
+    parts = []
+    for alo in range(0, len(A), cap):
+        ia, Ai = ids_a[alo : alo + cap], A[alo : alo + cap]
+        for blo in range(alo if diag else 0, len(B), cap):
+            ib = ids_b[blo : blo + cap]
+            S = Ai @ B[blo : blo + cap].T
+            keep = (S >= threshold) & (ia[:, None] != ib[None, :])
+            if diag and alo == blo:
+                keep = np.triu(keep, 1)
+            ai, bi = np.nonzero(keep)
+            if len(ai):
+                xa, xb = ia[ai], ib[bi]
+                parts.append((np.minimum(xa, xb), np.maximum(xa, xb), S[ai, bi]))
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    return tuple(np.concatenate(c) for c in zip(*parts))

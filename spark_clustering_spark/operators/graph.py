@@ -350,7 +350,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     width (~75k edges per task): with a fixed partition count the
     wedge stream sort-spills as the graph grows — measured 19.15x wall
     at 16x edges on a fixed 32 partitions vs 10.8x with the scaled
-    width (tools/triangle_growth.py). AQE can only coalesce, never
+    width (PERF.md, round 5 triangle growth). AQE can only coalesce, never
     split, so the width must come from the data. Output is one audit
     row (counts + coefficient)."""
     e = basket_edges(spark, sf_dir)  # cached pin, reused by deg + 3 join sides

@@ -21,14 +21,13 @@ unseeded randomness anywhere (SURVEY.md Q5).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_clustering_spark.functions.detagg import dround, sql_dround
 from spark_clustering_spark.functions.porthash import md5_int32, sql_hex_int
 from spark_clustering_spark.io import pin, table
+from spark_clustering_spark.ml.kernels import cosine_pairs, gemm_tile, unit_rows
 from spark_clustering_spark.registry import query
 
 # 16 minhash permutations in 4 bands of 4 rows; coefficients from a
@@ -533,55 +532,14 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gemm_row_cap(d: int) -> int:
-    """Max rows per GEMM block so the score tile fits the engine-wide
-    fixed byte budget — the same cap rule as ``similarity._gemm_grid``
-    (VERDICT r8 task 1 swept that derivation into this sibling kernel):
-    cap² score doubles ≤ GEMM_TILE_BYTES and each cap×d input slab
-    ≤ GEMM_TILE_BYTES/4, so per-task memory is constant at any corpus
-    size and task count grows linearly with the pair count."""
-    from spark_clustering_spark.pipeline.similarity import GEMM_TILE_BYTES
-
-    elems = GEMM_TILE_BYTES // 8
-    cap = int(math.isqrt(elems))
-    cap = min(cap, max(elems // max(4 * d, 1), 1))
-    return max(cap, 1)
-
-
-def _bcast_chunk(n: int) -> int:
-    """Row-chunk height for the broadcast GEMM path: the chunk×n score
-    slab stays under GEMM_TILE_BYTES (VERDICT r8: fixed chunk=1024 was
-    ~2.1 GB at the broadcast gate's maximum n≈262k). When even one row
-    × n exceeds the budget (low-dim corpora, where the broadcast gate
-    admits n up to 2^24 at d=1), the floor here is chunk=1 and the
-    COLUMN dimension is sub-tiled too (``_bcast_col_chunk``), so the
-    slab bound holds for all (n, d) — ADVICE r9."""
-    from spark_clustering_spark.pipeline.similarity import GEMM_TILE_BYTES
-
-    return max(1, min(1024, GEMM_TILE_BYTES // (8 * max(n, 1))))
-
-
-def _bcast_col_chunk(row_chunk: int) -> int:
-    """Column-tile width so row_chunk × col_chunk score doubles stay
-    ≤ GEMM_TILE_BYTES regardless of corpus width."""
-    from spark_clustering_spark.pipeline.similarity import GEMM_TILE_BYTES
-
-    return max(1, (GEMM_TILE_BYTES // 8) // max(row_chunk, 1))
-
-
 def _broadcast_gemm_pairs(e: DataFrame, threshold: float) -> DataFrame:
     """Small-table GEMM path: collect + broadcast the full normalized
-    matrix ONCE, then parallelize row-chunk indices — each task slices
-    its chunk of rows out of the broadcast and multiplies it against the
-    whole matrix, emitting pairs where its row id is the smaller (each
-    unordered pair appears exactly once). The upstream pipeline of
-    ``e`` is evaluated exactly once (the driver collect); the
-    distributed stage reads only integer chunk offsets, so this no
-    longer pays the upstream cost twice the way re-reading ``e`` as the
-    mapInPandas input did. The chunk height is derived from the row
-    count so the chunk×n score slab fits the fixed GEMM tile budget
-    (VERDICT r8: the old fixed chunk=1024 was a ~2.1 GB slab at the
-    broadcast gate's own maximum n≈262k)."""
+    matrix ONCE, then run one task per ``gemm_tile`` row tile — each
+    task scores its tile against the rows from its own first row on
+    (the upper half of the tile grid), so every unordered pair is
+    scored once. The upstream pipeline of ``e`` is evaluated exactly
+    once (the one ``toPandas`` collect); the distributed stage reads
+    only the tile offsets of an in-engine range."""
     import numpy as np
     import pandas as pd
 
@@ -592,38 +550,25 @@ def _broadcast_gemm_pairs(e: DataFrame, threshold: float) -> DataFrame:
             [], "a_id bigint, b_id bigint, cos_raw double"
         )
     ids_all = pdf_all["vec_id"].to_numpy(dtype=np.int64)
-    M = np.array(list(pdf_all["vec"]), dtype=np.float64)
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
+    M = unit_rows(pdf_all["vec"])
     bc = spark.sparkContext.broadcast((ids_all, M))
-    chunk = _bcast_chunk(len(ids_all))
-    starts = [(lo,) for lo in range(0, len(ids_all), chunk)]
-    idx = spark.createDataFrame(starts, "lo BIGINT").repartition(
-        min(len(starts), spark.sparkContext.defaultParallelism)
+    cap = gemm_tile(M.shape[1])
+    n_tiles = -(-len(ids_all) // cap)
+    idx = spark.range(
+        0, len(ids_all), cap,
+        min(n_tiles, spark.sparkContext.defaultParallelism),
     )
-
-    ccap = _bcast_col_chunk(chunk)
 
     def gemm(batches):
         ids_full, mat = bc.value
         for pdf in batches:
-            for lo in pdf["lo"].to_numpy(dtype=np.int64):
-                ids_v = ids_full[lo : lo + chunk]
-                rows = mat[lo : lo + chunk]
-                # column sub-tiles: the score slab is chunk×ccap ≤
-                # GEMM_TILE_BYTES even when chunk bottoms out at 1
-                for co in range(0, len(ids_full), ccap):
-                    ids_c = ids_full[co : co + ccap]
-                    S = rows @ mat[co : co + ccap].T
-                    mask = (S >= threshold) & (ids_v[:, None] < ids_c[None, :])
-                    ai, bi = np.nonzero(mask)
-                    if len(ai):
-                        yield pd.DataFrame(
-                            {
-                                "a_id": ids_v[ai],
-                                "b_id": ids_c[bi],
-                                "cos_raw": S[ai, bi],
-                            }
-                        )
+            for lo in pdf["id"].to_numpy(dtype=np.int64):
+                a, b, s = cosine_pairs(
+                    ids_full[lo : lo + cap], mat[lo : lo + cap],
+                    ids_full[lo:], mat[lo:], threshold, diag=True,
+                )
+                if len(a):
+                    yield pd.DataFrame({"a_id": a, "b_id": b, "cos_raw": s})
 
     return idx.mapInPandas(gemm, "a_id bigint, b_id bigint, cos_raw double")
 
@@ -649,16 +594,17 @@ def embedding_near_dup_pairs(
     blocks (BLAS dgemm) and emits only pairs above threshold. Nothing is
     collected on the driver and no full-table broadcast exists: shuffle
     volume is n·B rows per side. ``n_blocks`` defaults to the
-    count-derived grid (``_gemm_row_cap``): blocks = ceil(n / cap) with
-    cap chosen so the score tile fits the fixed GEMM_TILE_BYTES budget —
-    per-task memory is then CONSTANT at any corpus size and the task
+    count-derived grid: blocks = ceil(n / cap), cap = ``gemm_tile(d)``
+    — per-task memory is then CONSTANT at any corpus size and the task
     count grows linearly with the pair count (VERDICT r8 task 1 retired
     the fixed n_blocks=8 whose (n/8)² tile was ~8.6 GB right where this
-    path first engages). Inside each task the score matrix is computed
-    in cap×cap sub-tiles, so even a skew-fattened block can't exceed the
-    budget. The per-pair dot product is the same float64 BLAS reduction
-    regardless of blocking or tiling, so results are bit-identical to a
-    dense matmul (asserted across grids in tests/test_scale.py).
+    path first engages). Inside each task ``cosine_pairs`` scores in
+    cap×cap tiles, so even a skew-fattened block can't exceed the
+    budget; a diagonal block pair scores its one block's upper
+    triangle. The per-pair dot product is the same float64 BLAS
+    reduction regardless of blocking or tiling, so results are
+    identical to a dense matmul (asserted across grids in
+    tests/test_scale.py).
 
     ``e``: (vec_id bigint, vec array<double>). Returns
     (a_id, b_id, cos_raw) with a_id < b_id, cos_raw unrounded.
@@ -676,14 +622,13 @@ def embedding_near_dup_pairs(
     n_rows, dim = int(probe["n"]), int(probe["d"] or 0)
     if n_rows * max(dim, 1) <= broadcast_elems:
         return _broadcast_gemm_pairs(e, threshold)
-    row_cap = _gemm_row_cap(max(dim, 1))
     if n_blocks is None:
-        n_blocks = max(1, -(-n_rows // row_cap))
+        n_blocks = max(1, -(-n_rows // gemm_tile(max(dim, 1))))
     # Clamp the grid: the block-pair meta is broadcast to both
     # replicate joins, and B(B+1)/2 pairs stops being broadcast-sized
     # around B~10^4. Above the clamp, blocks grow as n/B instead —
-    # per-task SCORE memory stays pinned regardless (the cap×cap
-    # sub-tile loop below), only the input slabs grow (n/B·d doubles,
+    # per-task SCORE memory stays pinned regardless (cosine_pairs'
+    # cap×cap tiles), only the input slabs grow (n/B·d doubles,
     # ~12 MB at n=100M, d=64). Exact all-pairs is O(n²) dot products,
     # so beyond ~10M rows the honest route is the LSH-bucketed
     # q_dedup_semantic path, not a bigger grid (ADVICE r9 retired this
@@ -718,47 +663,19 @@ def embedding_near_dup_pairs(
     right = replicate("r", "bb")
 
     def gemm(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"a_id": [], "b_id": [], "cos_raw": []}
-        ).astype({"a_id": "int64", "b_id": "int64", "cos_raw": "float64"})
         if not len(l) or not len(r):
-            return empty
+            return pd.DataFrame({"a_id": [], "b_id": [], "cos_raw": []}).astype(
+                {"a_id": "int64", "b_id": "int64", "cos_raw": "float64"}
+            )
         ids_a = l["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = r["vec_id"].to_numpy(dtype=np.int64)
-        A = np.array(list(l["vec"]), dtype=np.float64)
-        B = np.array(list(r["vec"]), dtype=np.float64)
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
-        diag = int(l["ba"].iat[0]) == int(l["bb"].iat[0])
-        outs: list[pd.DataFrame] = []
-        # sub-tile loop: each S piece is ≤ row_cap² doubles no matter
-        # how large the cogrouped blocks are
-        for alo in range(0, len(ids_a), row_cap):
-            ia = ids_a[alo : alo + row_cap]
-            Ai = A[alo : alo + row_cap]
-            for blo in range(0, len(ids_b), row_cap):
-                ib = ids_b[blo : blo + row_cap]
-                S = Ai @ B[blo : blo + row_cap].T  # BLAS sub-tile matmul
-                # each unordered block pair is processed exactly once,
-                # so emit each vector pair canonically as (min, max);
-                # within a diagonal block the `<` mask alone prevents
-                # the mirrored duplicate
-                mask = (S >= threshold) & (ia[:, None] != ib[None, :])
-                if diag:
-                    mask &= ia[:, None] < ib[None, :]
-                ai, bi = np.nonzero(mask)
-                if len(ai):
-                    xa, xb = ia[ai], ib[bi]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "a_id": np.minimum(xa, xb),
-                                "b_id": np.maximum(xa, xb),
-                                "cos_raw": S[ai, bi],
-                            }
-                        )
-                    )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+        A = unit_rows(l["vec"])
+        if int(l["ba"].iat[0]) == int(l["bb"].iat[0]):
+            # both sides hold the same block: score it once
+            ab = cosine_pairs(ids_a, A, ids_a, A, threshold, diag=True)
+        else:
+            ids_b = r["vec_id"].to_numpy(dtype=np.int64)
+            ab = cosine_pairs(ids_a, A, ids_b, unit_rows(r["vec"]), threshold, diag=False)
+        return pd.DataFrame(dict(zip(("a_id", "b_id", "cos_raw"), ab)))
 
     return (
         left.groupby("ba", "bb")
@@ -791,10 +708,14 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dense all-pairs cosine is a matrix multiply — the one place where
     Spark's array HOFs (interpreted, not codegen'd) lose badly to an
     Arrow-batched Pandas path. The engine path is
-    ``embedding_near_dup_pairs``: blocked cogroup GEMM with no driver
-    collect and no full-table broadcast; the block grid is
-    count-derived (clamped at 4096) so the per-task score tile is
-    pinned at GEMM_TILE_BYTES at any corpus size. Exact all-pairs is
+    ``embedding_near_dup_pairs``, which picks by size. A corpus of at
+    most 2^24 vector elements — every generated scale (sf0.1 is
+    2000×64) — is collected once and broadcast, and each task scores
+    one row tile against the rows from it on. A larger corpus runs the
+    blocked cogroup GEMM with no collect and no full-table
+    broadcast; its block grid is count-derived (clamped at 4096) so
+    the per-task score tile is pinned at GEMM_TILE_BYTES at any corpus
+    size. Exact all-pairs is
     inherently O(n²) dot products, so this path's practical ceiling is
     ~10M rows; beyond that, LSH bucketing
     (pipeline/similarity.py::cosine_lsh_buckets) bounds the candidate

@@ -25,6 +25,12 @@ from spark_clustering_spark.functions.detagg import DEC, dround, sql_dround
 from spark_clustering_spark.functions.distance import as_double_array, cosine, dot_dec
 from spark_clustering_spark.functions.rng import py_lcg_uniform
 from spark_clustering_spark.io import artifact, pin, shuffle_width, table
+from spark_clustering_spark.ml.kernels import (
+    GEMM_TILE_BYTES,
+    cosine_pairs,
+    gemm_tile,
+    unit_rows,
+)
 from spark_clustering_spark.registry import query
 
 N_PROBES = 5
@@ -1042,23 +1048,17 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup(ve, cents=table_ivf_train(spark, sf_dir))
 
 
-def semdedup(
-    ve: DataFrame,
-    threshold: float = SEM_TAU,
-    cents: DataFrame | None = None,
-) -> DataFrame:
-    """The declared SemDeDup path as a reusable function of the vector
-    corpus — train + assign + GEMM pair scan + representative join —
-    so tools/scale_growth.py can measure the DECLARED key end-to-end
-    on a replicated corpus, not just the pair-scan helper."""
+def semdedup(ve: DataFrame, cents: DataFrame) -> DataFrame:
+    """The declared SemDeDup path as a function of the vector corpus and
+    its trained centroids — assign + GEMM pair scan + representative
+    join. Its end-to-end growth on a replicated corpus is recorded in
+    PERF.md (round 5, "semdedup DECLARED")."""
     # assignment via the map-side-combined min-struct aggregate: the
     # previous literal-inlined centroid expressions were fine at the
     # old fixed nlist=16 but become a √n·d-literal tree once nlist is
     # count-derived (28k literals at sf10 — codegen breaker). Tiebreak
     # identical to the oracle's (cdist, cid).
-    assign = ivf_assign(
-        ve, ivf_train(ve) if cents is None else cents, "vec"
-    ).select(
+    assign = ivf_assign(ve, cents, "vec").select(
         "vec_id", "vec", F.col("cid").cast("bigint").alias("cid")
     )
     # pair scan via the BLAS per-cluster kernel (63x the expression
@@ -1068,7 +1068,7 @@ def semdedup(
     # float noise, so no pair can flip against the oracle's
     # list_cosine_similarity. The expression-path twin is asserted
     # row-identical in tests/test_scale.py.
-    dup = semdedup_pairs_gemm(assign, threshold=threshold)
+    dup = semdedup_pairs_gemm(assign)
     reps = dup.groupBy("drop_id").agg(F.min("keep_id").alias("rep"))
     return assign.join(
         reps, assign["vec_id"] == reps["drop_id"], "left"
@@ -1377,56 +1377,33 @@ def semdedup_pairs_gemm(
     assign: DataFrame, threshold: float = SEM_TAU
 ) -> DataFrame:
     """Scale path for SemDeDup's within-cluster pair scan: one numpy
-    GEMM per cluster via applyInPandas (Arrow batches, BLAS sgemm —
-    the same kernel as the blocked embedding near-dup), instead of the
-    declared expression path's per-pair zip_with fold.
+    float64 GEMM per cluster via applyInPandas (Arrow batches, BLAS
+    dgemm — the same ``cosine_pairs`` kernel as the embedding near-dup
+    paths), instead of the declared expression path's per-pair
+    zip_with fold.
 
-    Why it exists (measured, tools/scale_growth.py): at 16x corpus the
-    expression path grows 35x wall (every pair pays a 64-term codegen
-    fold) while GEMM-backed scoring grows ~2x — BLAS turns the
-    in-cluster n_k² dot products into a single matrix multiply.
-    Clusters are bounded by design (nlist scales with corpus size), so
-    each cluster's matrix fits one task; the within-task score matrix
-    is additionally computed in fixed-budget sub-tiles (the same
-    ``_gemm_grid`` cap rule), so a skew-hot cluster degrades to more
-    BLAS calls — never to a quadratic n_k² score allocation.
+    Why it exists (measured, PERF.md "SemDeDup scale path"): at 16x
+    corpus the expression path grows 35x wall (every pair pays a
+    64-term codegen fold) while GEMM-backed scoring grows ~2x — BLAS
+    turns the in-cluster n_k² dot products into a single matrix
+    multiply. Clusters are bounded by design (nlist scales with corpus
+    size), so each cluster's matrix fits one task; the within-task
+    score matrix is computed in ``gemm_tile`` tiles (upper triangle
+    only), so a skew-hot cluster degrades to more BLAS calls — never
+    to a quadratic n_k² score allocation.
 
     ``assign``: (vec_id, vec array<double>, cid). Returns
     (keep_id, drop_id) candidate pairs with keep_id < drop_id —
     row-identical to the expression path (asserted in
     tests/test_scale.py)."""
+    import numpy as np
     import pandas as pd
 
     def per_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        empty = pd.DataFrame({"keep_id": [], "drop_id": []}).astype("int64")
-        if len(pdf) < 2:
-            return empty
-        X = np.array(list(pdf["vec"]), dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        nrm = np.linalg.norm(X, axis=1)
-        nrm[nrm == 0.0] = 1.0
-        Xn = X / nrm[:, None]
-        d = Xn.shape[1]
-        elems = GEMM_TILE_BYTES // 8
-        cap = max(min(int(math.isqrt(elems)), max(elems // (4 * d), 1)), 1)
-        outs = []
-        for alo in range(0, len(ids), cap):
-            for blo in range(alo, len(ids), cap):
-                S = Xn[alo : alo + cap] @ Xn[blo : blo + cap].T
-                iu, ju = np.where(S >= threshold)
-                iu, ju = iu + alo, ju + blo
-                m = iu < ju
-                if m.any():
-                    outs.append((iu[m], ju[m]))
-        if not outs:
-            return empty
-        iu = np.concatenate([o[0] for o in outs])
-        ju = np.concatenate([o[1] for o in outs])
-        a, b = ids[iu], ids[ju]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"keep_id": lo, "drop_id": hi})
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        X = unit_rows(pdf["vec"])
+        keep, drop, _ = cosine_pairs(ids, X, ids, X, threshold, diag=True)
+        return pd.DataFrame({"keep_id": keep, "drop_id": drop})
 
     return assign.groupBy("cid").applyInPandas(
         per_cluster, "keep_id BIGINT, drop_id BIGINT"
@@ -2622,14 +2599,6 @@ def q_vec_residual_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-task byte budget for the GEMM score tile S (rows_a x rows_b
-# doubles). 8 MiB keeps the whole working set (S + the A/B slabs) well
-# under typical executor task memory while still amortizing the Arrow
-# batch overhead; the A/B slabs get elems/(4d) row caps of their own so
-# high-d corpora can't blow the input side either.
-GEMM_TILE_BYTES = 8 << 20
-
-
 def _gemm_grid(n_sub: int, n: int, d: int, k: int) -> tuple[int, int]:
     """Derive the (bs, bc) block grid for knn_topk_gemm_exact from the
     actual table counts so the per-task GEMM tile fits a FIXED byte
@@ -2638,20 +2607,15 @@ def _gemm_grid(n_sub: int, n: int, d: int, k: int) -> tuple[int, int]:
     ~50 GB/task at 100x, the exact kmeans.java:94-style replication
     failure this kernel exists to retire).
 
-    cap = max rows per block on either side, chosen so
-      - the score tile is <= GEMM_TILE_BYTES: cap^2 * 8 <= budget;
-      - each input slab is <= budget/4:      cap * d * 8 <= budget/4;
-      - cap >= k (a corpus block smaller than k just returns all rows —
-        losslessness never depends on block size, this is purely so the
-        grid doesn't over-shard tiny inputs).
-    bs/bc = ceil(count / cap): the task count bs*bc then grows LINEARLY
-    with the pair count n_sub*n while per-task memory stays constant —
-    the gate in tests/test_gemm_exact.py asserts both properties across
-    a 10^6x count sweep."""
-    elems = GEMM_TILE_BYTES // 8
-    cap = int(math.isqrt(elems))
-    cap = min(cap, max(elems // max(4 * d, 1), 1))
-    cap = max(cap, k, 1)
+    cap = max rows per block on either side: ``gemm_tile(d)``, raised
+    to k (a corpus block smaller than k just returns all rows —
+    losslessness never depends on block size, this is purely so the
+    grid doesn't over-shard tiny inputs). bs/bc = ceil(count / cap):
+    the task count bs*bc then grows LINEARLY with the pair count
+    n_sub*n while per-task memory stays constant — the gate in
+    tests/test_gemm_exact.py asserts both properties across a 10^6x
+    count sweep."""
+    cap = max(gemm_tile(d), k)
     bs = max(1, -(-max(n_sub, 1) // cap))
     bc = max(1, -(-max(n, 1) // cap))
     return bs, bc
@@ -2728,14 +2692,10 @@ def knn_topk_gemm_exact(
     cbs = spark.range(bc).select(F.col("id").cast("int").alias("cb"))
     sas = spark.range(bs).select(F.col("id").cast("int").alias("sa"))
 
-    def blocks(left_extra: list[str]):
-        left = (
-            sub.select("src", "va", "na", *left_extra)
-            .withColumn(
-                "sa", F.pmod(F.xxhash64("src"), F.lit(bs)).cast("int")
-            )
-            .crossJoin(F.broadcast(cbs))
-        )
+    def blocks(left: DataFrame):
+        left = left.withColumn(
+            "sa", F.pmod(F.xxhash64("src"), F.lit(bs)).cast("int")
+        ).crossJoin(F.broadcast(cbs))
         right = (
             corpus.select("dst", "vb", "nb")
             .withColumn(
@@ -2774,7 +2734,7 @@ def knn_topk_gemm_exact(
             }
         )
 
-    cand = blocks([]).applyInPandas(
+    cand = blocks(sub.select("src", "va", "na")).applyInPandas(
         topk_kernel, "src bigint, dst bigint, cosf double"
     )
     wk = Window.partitionBy("src").orderBy(F.col("cosf").desc(), F.col("dst"))
@@ -2799,24 +2759,7 @@ def knn_topk_gemm_exact(
         ai, bi = np.nonzero(mask)
         return pd.DataFrame({"src": ids_a[ai], "dst": ids_b[bi]})
 
-    def blocks_thr():
-        left = (
-            sub_thr.select("src", "va", "na", "thr")
-            .withColumn(
-                "sa", F.pmod(F.xxhash64("src"), F.lit(bs)).cast("int")
-            )
-            .crossJoin(F.broadcast(cbs))
-        )
-        right = (
-            corpus.select("dst", "vb", "nb")
-            .withColumn(
-                "cb", F.pmod(F.xxhash64("dst"), F.lit(bc)).cast("int")
-            )
-            .crossJoin(F.broadcast(sas))
-        )
-        return left.groupby("sa", "cb").cogroup(right.groupby("sa", "cb"))
-
-    survivors = blocks_thr().applyInPandas(
+    survivors = blocks(sub_thr.select("src", "va", "na", "thr")).applyInPandas(
         survivor_kernel, "src bigint, dst bigint"
     )
     # shuffle-pin the vector re-joins: every side here is

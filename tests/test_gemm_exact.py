@@ -136,10 +136,8 @@ def test_gemm_grid_tile_bounded_and_task_count_linear():
     the task count bs*bc must grow linearly with the pair count (the
     work is O(n_sub*n) by definition; anything superlinear in task
     count or memory is a regression)."""
-    from spark_clustering_spark.pipeline.similarity import (
-        GEMM_TILE_BYTES,
-        _gemm_grid,
-    )
+    from spark_clustering_spark.ml.kernels import GEMM_TILE_BYTES
+    from spark_clustering_spark.pipeline.similarity import _gemm_grid
 
     d, k = 64, 5
     prev_tasks = 0
@@ -261,21 +259,23 @@ def test_gemm_exact_equals_declared_all_pairs_sf01(spark):
 
 
 def test_near_dup_grid_tile_bounded_and_task_count_linear():
-    """VERDICT r8 task 1 gate for the sibling kernel: the blocked
-    cogroup path of embedding_near_dup_pairs must derive its block
-    count from the probed row count so the per-task working set
-    (cap² score tile + two cap×d input slabs) stays under the fixed
-    budget at ANY corpus size — the fixed n_blocks=8 it replaces gave
-    a (n/8)² tile, ~8.6 GB/task right where the path first engages —
-    and the B(B+1)/2 unordered-block-pair task count must grow
-    linearly with the pair count n²."""
-    from spark_clustering_spark.pipeline.dedup import _bcast_chunk, _gemm_row_cap
-    from spark_clustering_spark.pipeline.similarity import GEMM_TILE_BYTES
+    """VERDICT r8 task 1 gate for the pair kernels: ``gemm_tile`` — the
+    one tile rule of the broadcast, cogroup and per-cluster GEMM paths
+    — keeps the cap² score tile and the cap×d input slab under the
+    fixed budget for every dimension, and the blocked cogroup grid it
+    derives (B = ceil(n / cap)) keeps the per-task working set bounded
+    at ANY corpus size — the fixed n_blocks=8 it replaces gave a
+    (n/8)² tile, ~8.6 GB/task right where the path first engages —
+    while the B(B+1)/2 unordered-block-pair task count grows linearly
+    with the pair count n²."""
+    from spark_clustering_spark.ml.kernels import GEMM_TILE_BYTES, gemm_tile
 
+    for d in (1, 8, 64, 768, 4096):
+        cap = gemm_tile(d)
+        assert cap >= 1 and cap * cap * 8 <= GEMM_TILE_BYTES, (d, cap)
+        assert cap * d * 8 <= GEMM_TILE_BYTES // 4, (d, cap)  # input slab cap
     d = 64
-    cap = _gemm_row_cap(d)
-    assert cap >= 1 and cap * cap * 8 <= GEMM_TILE_BYTES
-    assert cap * d * 8 <= GEMM_TILE_BYTES // 4  # input slab cap
+    cap = gemm_tile(d)
     prev_tasks = 0
     tasks_at = {}
     for n in (500, 262_144, 2_000_000, 20_000_000, 500_000_000):
@@ -290,18 +290,6 @@ def test_near_dup_grid_tile_bounded_and_task_count_linear():
     # 10x the rows -> 100x the pairs -> task count within 4x of 100x
     ratio = tasks_at[20_000_000] / tasks_at[2_000_000]
     assert 100 / 4 <= ratio <= 100 * 4, tasks_at
-    # broadcast-path chunk: the row-chunk × col-chunk score slab obeys
-    # the budget for ALL (n, d) — including the low-dim extreme where
-    # the broadcast gate admits n=2^24 at d=1 and the row chunk bottoms
-    # out at 1 (the column dimension is sub-tiled there; ADVICE r9
-    # retired the old chunk==1 exemption)
-    from spark_clustering_spark.pipeline.dedup import _bcast_col_chunk
-
-    for n in (100, 2_000, 262_144, 2**24):
-        chunk = _bcast_chunk(n)
-        assert 1 <= chunk <= 1024
-        ccap = _bcast_col_chunk(chunk)
-        assert chunk * ccap * 8 <= GEMM_TILE_BYTES, (n, chunk, ccap)
 
 
 def test_semdedup_hot_cluster_subtiles_match_brute_force(spark):

@@ -792,28 +792,50 @@ def test_gains_curve_matches_python(spark):
     assert abs(got[GAINS_DECILES].lift - 1.0) < 1e-9
 
 
-def test_asof_forward_matches_python(spark):
+def test_asof_forward_matches_python(spark, tmp_path):
+    """The generated events (January 2024) all fall after the last
+    order (2001-08-01), so on the generated tables both sides are
+    empty. The key runs on a copy whose events are shifted into the
+    orders' date range, and the expected map must be non-empty."""
+    import datetime as dt
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from spark_clustering_spark.io import table
     from spark_clustering_spark.operators.joins import q_join_asof_forward
 
+    ev = pq.read_table(f"{SF_SMALL}/events.parquet")
+    shift = pa.scalar(dt.datetime(2024, 1, 1) - dt.datetime(1998, 1, 1), pa.duration("us"))
+    i = ev.schema.get_field_index("ts")
+    pq.write_table(
+        ev.set_column(i, "ts", pc.subtract(ev["ts"], shift)),
+        tmp_path / "events.parquet",
+    )
+    shutil.copy(f"{SF_SMALL}/orders.parquet", tmp_path / "orders.parquet")
+    sf_dir = str(tmp_path)
+
     got = {
         r.event_id: (r.next_date, r.next_orderkey)
-        for r in q_join_asof_forward(spark, SF_SMALL).collect()
+        for r in q_join_asof_forward(spark, sf_dir).collect()
     }
     orders = [
         (r.o_custkey, r.o_orderdate, r.o_orderkey)
-        for r in table(spark, SF_SMALL, "orders").collect()
+        for r in table(spark, sf_dir, "orders").collect()
     ]
     by_user: dict[int, list] = defaultdict(list)
     for c, d, k in orders:
         by_user[c].append((d, k))
     expect = {}
-    for e in table(spark, SF_SMALL, "events").collect():
+    for e in table(spark, sf_dir, "events").collect():
         cands = [(d, k) for d, k in by_user.get(e.user_id, []) if d >= e.ts]
         if cands:
             dmin = min(d for d, _ in cands)
             kmin = min(k for d, k in cands if d == dmin)
             expect[e.event_id] = (dmin.strftime("%Y-%m-%d"), kmin)
+    assert expect
     assert got == expect
 
 

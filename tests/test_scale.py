@@ -208,7 +208,8 @@ def test_ntile_scalable_invariants_at_1m_rows(spark):
 def test_blocked_gemm_invariant_to_block_count(spark):
     """The blocked all-pairs GEMM must return identical pairs for any
     n_blocks (blocking is an execution detail, not a semantic one) —
-    including n_blocks=1, the degenerate single-block case.
+    including n_blocks=1, the degenerate single-block case, and
+    n_blocks=None, the count-derived grid.
     broadcast_elems=0 forces the blocked cogroup path (at test scale
     the size gate would otherwise route every call through the
     broadcast kernel and this test would compare a single code path to
@@ -222,12 +223,12 @@ def test_blocked_gemm_invariant_to_block_count(spark):
         "vec_id", as_double_array("embedding").alias("vec")
     )
     results = {}
-    for nb in (1, 3, 8):
+    for nb in (1, 3, 8, None):
         rows = embedding_near_dup_pairs(
             e, threshold=0.4, n_blocks=nb, broadcast_elems=0
         ).collect()
         results[nb] = {(r["a_id"], r["b_id"], round(r["cos_raw"], 10)) for r in rows}
-    assert results[1] == results[3] == results[8]
+    assert results[1] == results[3] == results[8] == results[None]
     assert len(results[1]) > 0  # non-vacuous at this threshold
 
     bcast = embedding_near_dup_pairs(

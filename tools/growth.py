@@ -1,10 +1,8 @@
 """Unified growth harness (VERDICT r5 task 6).
 
-Supersedes the one-off tools/{scale,triangle,spatial,round5d,round5e}
-_growth.py replication scripts with REAL data growth: each selected
-declared query runs at two scale factors (default sf0.01 -> sf0.1,
-10x rows) and the wall-clock ratio is checked against a per-query
-linearity budget. tests/test_growth.py runs this as a (slow-marked)
+Measures REAL data growth: each selected declared query runs at two
+scale factors (default sf0.01 -> sf0.1, 10x rows) and the wall-clock
+ratio is checked against a per-query linearity budget. tests/test_growth.py runs this as a (slow-marked)
 pytest so the next quadratic surprise — the r5 triangle-width bug was
 caught only because someone happened to run a script — fails CI
 instead.
